@@ -63,7 +63,7 @@ _ENGINE_CACHE: dict[str, Engine] = {}
 def _corpus(spark: SparkSession, sf_dir: str):
     if sf_dir not in _CORPUS_CACHE:
         _CORPUS_CACHE[sf_dir] = prepare(
-            _docs(spark, sf_dir), id_col="doc_id", use_pandas_udf=False
+            _docs(spark, sf_dir), id_col="doc_id"
         )
     return _CORPUS_CACHE[sf_dir]
 

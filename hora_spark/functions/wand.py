@@ -31,6 +31,9 @@ import numpy as np
 
 from hora_spark.functions.codec import decode_block, segment_gather
 
+# decoded-width cap (docs) of one batch of candidate intervals
+BATCH_DOCS = 8192
+
 
 class TermPosting:
     """Decoded-on-demand posting list of one (term, shard) segment row.
@@ -430,17 +433,12 @@ def shard_topk(
     k1: float,
     b: float,
     prune: bool = True,
-    batch_docs: int = 8192,
-    first_batch_docs: int | None = None,
     deleted: np.ndarray | None = None,
     allowed: np.ndarray | None = None,
     min_match: int = 0,
     min_match_slots: list[int] | None = None,
     required: list[list[int]] | None = None,
     chains: list[tuple[list[tuple[int, list[int]]], int | None, bool]] | None = None,
-    phrase: list[tuple[int, list[int]]] | None = None,
-    near_window: int | None = None,
-    near_unordered: bool = False,
     after: tuple[float, int] | None = None,
     dismax_tb: float | None = None,
     demote: tuple[np.ndarray, float] | None = None,
@@ -466,9 +464,6 @@ def shard_topk(
     chains: positional clauses (see _score_terms_on_docs) — every chain
     must match; θ then tracks the k-th best CHAIN-qualified score,
     keeping block-max pruning exact for phrases/proximity too.
-    phrase/near_window/near_unordered are the single-chain legacy spelling
-    (phrase= slots, near_window= proximity switch) — normalized into one
-    chains entry here.
 
     required: must clauses — slot-index groups that every result doc has
     to match (Lucene '+term'); dropped pre-heap like min_match, so the
@@ -492,19 +487,9 @@ def shard_topk(
     appear; scores of kept docs are the unfiltered scores (stats global).
     WAND pruning stays exact: the unfiltered block bounds only
     over-estimate the filtered scores.
-    first_batch_docs: smaller width cap used while θ is still −inf — a
-    SOUND early-θ seed (θ only ever comes from actually-scored docs; a
-    cross-shard seed from block upper bounds would be unsound because a
-    bound need not be attained by any doc). Establishing θ after less
-    decoded width lets later batches skip more; None = batch_docs
-    (measured A/B in tools/theta_ab.py, PLANS.md §3).
     """
     if not terms:
         return np.empty(0, np.int64), np.empty(0, np.float64)
-
-    if phrase is not None:  # legacy single-chain spelling
-        chains = (list(chains) if chains else []) + [
-            (phrase, near_window, near_unordered)]
 
     if not prune or k is None:
         # k=None = match ENUMERATION (facets / match counting / export):
@@ -547,7 +532,6 @@ def shard_topk(
     top_ids = np.empty(0, np.int64)
     top_scores = np.empty(0, np.float64)
     theta = -np.inf
-    first_cap = first_batch_docs or batch_docs
     pos = 0
     while pos < len(order):
         # strict <: a doc can ATTAIN ub (max in every covering block), and a
@@ -555,13 +539,11 @@ def shard_topk(
         # ub == θ would break exact tie-break identity with the oracle
         if ub[order[pos]] < theta and len(top_ids) >= k:
             break  # every remaining interval is provably below θ
-        # take a batch of intervals (bounded decoded width); while θ is
-        # still unset, the smaller first_cap applies
-        cap = batch_docs if theta > -np.inf else first_cap
+        # take a batch of intervals (bounded decoded width)
         batch = [order[pos]]
         width = int(hi_edges[order[pos]] - lo_edges[order[pos]] + 1)
         pos += 1
-        while pos < len(order) and width < cap:
+        while pos < len(order) and width < BATCH_DOCS:
             nxt = order[pos]
             if ub[nxt] < theta and len(top_ids) >= k:
                 break

@@ -64,9 +64,6 @@ LINEAGE_COLS = [
     "doc_count", "bytes", "wall_time_s",
 ]
 
-# back-compat alias (incremental/append path encodes from tuple rows)
-_encode_shard = encode_shard_rows
-
 
 def _has_parquet(spark: SparkSession, d: str) -> bool:
     """True if the dir contains any parquet file — via the Hadoop

@@ -155,7 +155,6 @@ def prepare(
     id_col: str | None = "doc_id",
     order_cols: list[str] | None = None,
     cfg: EngineConfig | None = None,
-    use_pandas_udf: bool = True,  # kept for API compat; tf is always Arrow
     unicode: bool = False,
 ) -> Corpus:
     """text table → Corpus. If id_col is None, assigns doc_id by dense rank

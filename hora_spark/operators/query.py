@@ -1,20 +1,30 @@
 """Top-k BM25 retrieval over the segment table — the `search(item, k)`
 analog (/root/reference/src/core/ann_index.rs:74-97).
 
-Lifecycle (mirrors SURVEY.md §3.2):
-  tokenize query with THE SAME tokenizer (driver-side, tiny)
-  → look up query-term idf from the stats table (predicate-pushed filter,
-    small collect — the query-vs-centroid ranking analog,
-    /root/reference/src/index/pq_idx.rs:413-421)
-  → ONE segment scan WHERE term IN (query terms ∪ {norms row}): parquet
-    row-group pruning via min/max on the term column — the
-    `search_n_center` probe analog: only matching index data is read.
-    The per-shard doc-length sidecar rides in the same scan as a
-    reserved-term row, so no second table, no cogroup, no driver state.
-  → per shard: DAAT + block-max WAND in a grouped pandas UDF → local top-k
-  → global top-k: per-query window rank on (score DESC, doc_id ASC)
-    (the distributed form of hora's heap truncation,
-    /root/reference/src/index/hnsw_idx.rs:434-437)
+Lifecycle (mirrors SURVEY.md §3.2): `search_topk` runs five stages, one
+module-level function each.
+  1. normalize (`_normalize`): every query — a string, a (text, mode[,
+     near_window]) tuple or a dict — merges with the call-level options
+     into ONE frozen `QuerySpec`, validated and tokenized with THE SAME
+     tokenizer the index was built with (driver-side, tiny, no job).
+  2. resolve terms (`_resolve_terms`): prefix/fuzzy/wildcard/regex
+     expansion against the stats-table dictionary, boost-key scope, and
+     the query-term idf lookup (predicate-pushed filter, small collect —
+     the query-vs-centroid ranking analog, hora's
+     src/index/pq_idx.rs:413-421), served by the per-snapshot idf cache
+     whenever it can be.
+  3. choose the physical plan (`_choose_plan`): single-task, distributed
+     or cogroup, from the snapshot's size, its deletes and the filter.
+  4. run (`_run`): ONE segment scan WHERE term IN (query terms ∪ NOT
+     terms) — parquet row-group pruning via min/max on the term column,
+     the `search_n_center` probe analog: only matching index data is read
+     (a store_dl=False index adds its reserved norms row to the same
+     scan) — then per shard DAAT + block-max WAND in a pandas UDF
+     (`_shard_search`) → local top-k.
+  5. merge (`_merge`): global top-k by a per-query rank on (score DESC,
+     doc_id ASC) (the distributed form of hora's heap truncation,
+     src/index/hnsw_idx.rs:434-437); the single-task plan merges inside
+     its one task.
 
 Queries are BATCHED: one Spark job scores any number of queries; the shard
 UDF loops over queries in numpy. Single-query latency is the batch of one.
@@ -22,7 +32,11 @@ UDF loops over queries in numpy. Single-query latency is the batch of one.
 
 from __future__ import annotations
 
+import math
 import re
+from dataclasses import dataclass, replace
+from functools import partial
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -38,6 +52,7 @@ from hora_spark.sources.storage import SnapshotStore
 RESULT_SCHEMA = "query_id int, doc_id long, score double"
 
 POSITIONAL_MODES = ("phrase", "near", "near_unordered")
+_MODES = ("any", "all") + POSITIONAL_MODES
 
 _EMPTY = pd.DataFrame(
     {"query_id": pd.Series([], dtype=np.int32),
@@ -46,10 +61,174 @@ _EMPTY = pd.DataFrame(
 )
 
 
+@dataclass(frozen=True)
+class QuerySpec:
+    """One query as the shard UDF sees it: normalized, validated and
+    tokenized once on the driver (`QuerySpec.from_options`). Every token
+    field holds index tokens. Frozen and hashable over plain values, so
+    equal specs ARE the same query — the batch memo keys on the spec.
+    The four expansion fields are filled by normalize and folded into
+    `terms` by resolve (PLANS.md §1 lists which stage fills each field)."""
+
+    # scored tokens: RAW order for positional modes (order and, for
+    # phrase, duplicates define the match), sorted distinct otherwise
+    terms: tuple[str, ...] = ()
+    mode: str = "any"
+    near_window: int = 5
+    exclude: tuple[str, ...] = ()  # NOT terms, fields_not terms included
+    min_match: int = 0
+    after: tuple[float, int] | None = None  # (score, doc_id) cursor
+    boosts: tuple[tuple[str, float], ...] = ()  # sorted (term, weight)
+    required: tuple[str, ...] = ()  # boolean-query must terms
+    # boolean-query positional clauses: (tokens, window | None, unordered)
+    chains: tuple[tuple[tuple[str, ...], int | None, bool], ...] = ()
+    dismax_tb: float | None = None  # None = plain BM25 sum
+    filter_groups: tuple[tuple[str, ...], ...] = ()  # 'field:tok' OR-groups
+    demote_terms: tuple[str, ...] = ()  # boosting-query negative terms
+    demote_factor: float = 1.0
+    stems: tuple[str, ...] = ()
+    fuzzy: tuple[tuple[str, int], ...] = ()
+    wildcards: tuple[str, ...] = ()
+    regexes: tuple[str, ...] = ()
+
+    @property
+    def scored_terms(self) -> set[str]:
+        """Every term that can score: text, must and chain tokens."""
+        return (set(self.terms) | set(self.required)
+                | {t for ct, _, _ in self.chains for t in ct})
+
+    @property
+    def id_terms(self) -> tuple[str, ...]:
+        """Terms whose postings decode doc ids only: NOT and demotion."""
+        return self.exclude + self.demote_terms
+
+    @classmethod
+    def from_options(cls, o: dict, meta: dict) -> QuerySpec:
+        """One query's options (`_query_options`) → its spec, tokenized
+        with the index's pinned mode and validated against its meta."""
+        mode, mm, pf = o["mode"], int(o["min_match"]), bool(o["prefix"])
+        after = None
+        if o["after"] is not None:
+            s, d = o["after"]
+            after = (float(s), int(d))
+        boosts = _norm_boosts(o["boosts"])
+        syn = o["synonyms"]
+        req = o.get("required") or ()
+        req = [req] if isinstance(req, str) else list(req)
+        phs = _norm_phrases(o.get("phrases"))
+        dismax_tb = _norm_dismax(o["score_mode"], o["tie_breaker"])
+        fds = _norm_fieldspec(o["fields"])
+        fnot = _norm_fieldspec(o["fields_not"])
+        neg = _norm_negative(o["negative"], o["negative_boost"])
+        if mm and mode != "any":
+            raise ValueError(
+                "min_match applies to mode='any' only (mode='all' IS "
+                "min_match=len(terms); positional modes imply it)")
+        if pf and mode != "any":
+            raise ValueError(
+                "prefix/fuzzy expansion applies to mode='any' only")
+        if pf and mm:
+            raise ValueError(
+                "min_match over prefix/fuzzy expansions is ambiguous (one "
+                "stem can satisfy many clauses) — use one or the other")
+        if syn and (mode != "any" or mm or pf):
+            raise ValueError(
+                "synonyms apply to plain mode='any' queries only (their "
+                "count/position semantics over expanded groups are "
+                "ambiguous in min_match/prefix/positional modes)")
+        if (req or phs) and mode != "any":
+            raise ValueError(
+                "required terms / phrase clauses are boolean-query parts "
+                "(mode='any' base); the whole-query positional/conjunctive "
+                "modes cannot host them")
+        if (req or phs) and syn:
+            raise ValueError(
+                "synonyms cannot compose with required/phrase clauses "
+                "(expansion semantics over must clauses are ambiguous)")
+        if ((mode in POSITIONAL_MODES or phs)
+                and not bool(meta.get("store_positions", False))):
+            raise ValueError(
+                "phrase/near search requires an index built with "
+                "IndexConfig.store_positions=True"
+            )
+
+        # tokenize with the INDEX's pinned mode (recorded at build time) —
+        # a unicode-built index must see unicode query terms and vice versa
+        uni = bool(meta.get("unicode", False))
+        tok = partial(tokenize_py, unicode=uni)
+        exclude = set(tok(o["exclude"])) if o["exclude"] else set()
+        groups: tuple[tuple[str, ...], ...] = ()
+        if fds:
+            # one OR-group per field, AND across fields; sorted field
+            # order pins the required-group order (determinism)
+            ft = _field_terms(fds, "fields", uni, meta)
+            groups = tuple(tuple(ft[f]) for f in sorted(ft))
+        if fnot:
+            # negative filters ride the NOT-term machinery (doc ids only)
+            exclude.update(*_field_terms(fnot, "fields_not", uni, meta).values())
+        demote, factor = (), 1.0
+        if neg is not None:
+            neg_text, factor = neg
+            demote = tuple(sorted(set(tok(neg_text))))
+        expansions: tuple = ((), (), (), ())
+        if mode in POSITIONAL_MODES:
+            terms = tok(o["text"])
+        elif pf:
+            plains, *expansions = _parse_prefix_terms(o["text"], uni)
+            terms = sorted(set(plains))
+        else:
+            terms = sorted(set(tok(o["text"])))
+        # boolean-query clauses: must terms tokenize plainly (each word
+        # must reduce to index tokens — all become required); phrase
+        # clauses keep RAW ordered token lists like whole-query phrases
+        required = sorted({t for w in req for t in tok(w)})
+        chains = []
+        for p_text, p_win, p_unord in phs:
+            c_toks = tok(p_text)
+            if len(c_toks) < 2:
+                raise ValueError(
+                    f"phrase clause {p_text!r} must tokenize to at least "
+                    "two tokens (a single token is just a required term)")
+            chains.append((tuple(c_toks), p_win, p_unord))
+        if syn:
+            norm_sy = {
+                _one_token(key, uni, f"synonym key {key!r} must reduce to "
+                           "exactly one index token"):
+                [_one_token(v, uni, f"synonym {v!r} for {key!r} must reduce "
+                            "to exactly one index token (multi-token "
+                            "synonyms would need phrase semantics)")
+                 for v in ([vals] if isinstance(vals, str) else vals)]
+                for key, vals in syn.items()}
+            terms = sorted(set(terms)
+                           | {s for t in terms for s in norm_sy.get(t, ())})
+        if boosts:
+            boosts = {_one_token(key, uni, f"boost key {key!r} must reduce "
+                                 "to exactly one index token"): w
+                      for key, w in boosts.items()}
+        stems, fuzzy, wildcards, regexes = expansions
+        return cls(
+            terms=tuple(terms), mode=mode, near_window=int(o["near_window"]),
+            exclude=tuple(sorted(exclude)), min_match=mm, after=after,
+            boosts=tuple(sorted(boosts.items())) if boosts else (),
+            required=tuple(required), chains=tuple(chains),
+            dismax_tb=dismax_tb, filter_groups=groups, demote_terms=demote,
+            demote_factor=factor if demote else 1.0, stems=tuple(stems),
+            fuzzy=tuple(fuzzy), wildcards=tuple(wildcards),
+            regexes=tuple(regexes))
+
+
+def _chain_slots(toks, window, idx_of: dict[str, list[int]]) -> list:
+    """One positional chain's slots: an exact phrase (window None) has one
+    slot per token OFFSET; a proximity chain one per DISTINCT token in
+    query order (the first is the anchor of an ordered near)."""
+    if window is None:
+        return [(off, idx_of[tok]) for off, tok in enumerate(toks)]
+    return [(i, idx_of[tok]) for i, tok in enumerate(dict.fromkeys(toks))]
+
+
 def _shard_search(
     seg_pdf: pd.DataFrame,
-    queries: list[tuple[list[str], str, int, list[str], int, tuple | None,
-                        dict | None]],
+    queries: list[QuerySpec],
     idf_map: dict,
     k: int | None,
     avgdl: float,
@@ -87,9 +266,7 @@ def _shard_search(
     # each is an independent posting source — every doc lives in exactly
     # one source, so summing per-source contributions stays exact and the
     # per-source block maxima still add up to a true upper bound
-    excl_all = ({t for q in queries for t in q[3]}
-                | {t for q in queries if q[11] is not None
-                   for t in q[11][0]})  # boosting-query negative terms
+    excl_all = {t for q in queries for t in q.id_terms}
     # exclusion terms need only their DOC IDS (no idf, no tf/dl decode):
     # keep the raw compressed sources and decode ids lazily, once per term
     excl_raw: dict[str, list[tuple[list, np.ndarray]]] = {}
@@ -117,48 +294,46 @@ def _shard_search(
         ))
     excl_cache: dict[str, np.ndarray | None] = {}
 
-    def _excl_ids(term: str) -> np.ndarray | None:
-        """Sorted unique doc ids of one exclusion term in this shard —
-        decoded once per (shard, term) regardless of how many queries
+    def _excl_ids(terms) -> np.ndarray | None:
+        """Sorted unique doc ids of these exclusion terms in this shard —
+        each term decoded once per shard regardless of how many queries
         exclude it. Decodes ONLY doc_blocks (ids): exclusion needs no
         tf/dl, so a store_dl=False layout needs no norms lookup here."""
-        if term in excl_cache:
-            return excl_cache[term]
-        srcs = excl_raw.get(term)
-        out = None
-        if srcs:
-            from hora_spark.functions.codec import decode_block
+        arrs = []
+        for term in terms:
+            if term not in excl_cache:
+                from hora_spark.functions.codec import decode_block
 
-            parts = []
-            for blocks, last in srcs:
-                for j, blk in enumerate(blocks):
-                    parts.append(decode_block(
-                        bytes(blk), base=int(last[j - 1]) if j else 0,
-                        delta=True))
-            if parts:
-                out = np.unique(np.concatenate(parts))
-        excl_cache[term] = out
-        return out
+                parts = [decode_block(bytes(blk), base=int(last[j - 1]) if j else 0,
+                                      delta=True)
+                         for blocks, last in excl_raw.get(term, ())
+                         for j, blk in enumerate(blocks)]
+                excl_cache[term] = np.unique(np.concatenate(parts)) if parts else None
+            if excl_cache[term] is not None and len(excl_cache[term]):
+                arrs.append(excl_cache[term])
+        if not arrs:
+            return None
+        return arrs[0] if len(arrs) == 1 else np.unique(np.concatenate(arrs))
 
     _NO_HITS = (np.empty(0, np.int64), np.empty(0, np.float64))
 
     # mode rides PER QUERY (a mixed phrase + bag-of-words batch is the
     # normal shape of real traffic — one Spark job serves it)
-    def _run_query(terms, mode, near_window, excl_terms, min_match,
-                   after, boosts, req_toks, chain_specs,
-                   dismax_tb, filter_groups, demote_spec):
-        positional = mode in POSITIONAL_MODES
+    def _run_query(q: QuerySpec):
+        terms = q.terms
+        positional = q.mode in POSITIONAL_MODES
+        boolean = bool(q.required or q.chains)
         # phrase/near modes ship RAW ordered token lists (order and, for
         # phrase, duplicates matter); other modes ship sorted distinct.
         # mode='any' boolean queries add must terms and positional-chain
         # terms to the slot universe (all matched terms score)
         if positional:
             distinct = sorted(set(terms))
-        elif req_toks or chain_specs:
-            distinct = sorted(set(terms) | set(req_toks)
-                              | {tok for ct, _, _ in chain_specs for tok in ct})
+        elif boolean:
+            distinct = sorted(q.scored_terms)
         else:
             distinct = terms
+        boosts = dict(q.boosts)
         tp: list[TermPosting] = []
         idx_of: dict[str, list[int]] = {}
         for t in distinct:
@@ -167,7 +342,7 @@ def _shard_search(
                 # per-term boost (term^w): boosted VIEWS share the
                 # parent's decode caches, so blocks decode once per
                 # shard however many queries boost this term
-                w = boosts.get(t, 1.0) if boosts else 1.0
+                w = boosts.get(t, 1.0)
                 if w != 1.0:
                     plist = [p.boosted(w) for p in plist]
                 idx_of[t] = list(range(len(tp), len(tp) + len(plist)))
@@ -180,43 +355,24 @@ def _shard_search(
         if positional:
             if len(idx_of) < len(distinct):
                 return _NO_HITS  # an absent term makes the match unreachable
-            if mode == "phrase":
-                slots = [(off, idx_of[tok]) for off, tok in enumerate(terms)]
-                chains = [(slots, None, False)]
-            else:
-                # near/near_unordered: one slot per DISTINCT term in
-                # query order; anchored near uses the first as the
-                # proximity anchor, unordered lets any slot anchor
-                seen: list[str] = []
-                for tok in terms:
-                    if tok not in seen:
-                        seen.append(tok)
-                slots = [(i, idx_of[tok]) for i, tok in enumerate(seen)]
-                chains = [(slots, near_window, mode == "near_unordered")]
-        elif req_toks or chain_specs:
+            # phrase: exact adjacency; near/near_unordered: anchored
+            # proximity uses the first term as the anchor, unordered lets
+            # any slot anchor
+            window = None if q.mode == "phrase" else q.near_window
+            chains = [(_chain_slots(terms, window, idx_of), window,
+                       q.mode == "near_unordered")]
+        elif boolean:
             # boolean query (query_string): must terms + positional
             # chains are REQUIRED clauses — a shard missing any of their
             # terms can contribute no results (shards partition the
             # doc-id space, so this is a per-shard skip, not a global one)
-            if any(t not in idx_of for t in req_toks) or any(
-                    tok not in idx_of
-                    for ct, _, _ in chain_specs for tok in ct):
+            if any(t not in idx_of for t in q.required) or any(
+                    t not in idx_of for ct, _, _ in q.chains for t in ct):
                 return _NO_HITS
-            required = [idx_of[t] for t in req_toks] or None
-            built = []
-            for c_toks, c_win, c_unord in chain_specs:
-                if c_win is None:
-                    slots = [(off, idx_of[tok])
-                             for off, tok in enumerate(c_toks)]
-                else:
-                    seen = []
-                    for tok in c_toks:
-                        if tok not in seen:
-                            seen.append(tok)
-                    slots = [(i, idx_of[tok]) for i, tok in enumerate(seen)]
-                built.append((slots, c_win, c_unord))
-            chains = built or None
-            if min_match >= 1:
+            required = [idx_of[t] for t in q.required] or None
+            chains = [(_chain_slots(ct, cw, idx_of), cw, cu)
+                      for ct, cw, cu in q.chains] or None
+            if q.min_match >= 1:
                 # minimum_should_match counts SHOULD clauses only (the
                 # Lucene convention when must/phrase clauses are present)
                 mm_slots = [i for t in sorted(set(terms))
@@ -228,9 +384,9 @@ def _shard_search(
         # honors an explicit per-query min_match (minimum_should_match:
         # at least that many distinct terms PRESENT in the doc — absent
         # terms can never count, matching Lucene's matched-clause count)
-        mm = (len(terms) if mode == "all"
-              else len(distinct) if positional else min_match)
-        if filter_groups:
+        mm = (len(terms) if q.mode == "all"
+              else len(distinct) if positional else q.min_match)
+        if q.filter_groups:
             # fielded filters: zero-score must clauses. Each group's
             # '<field>:<token>' postings join the slot list with idf 0 —
             # contribution 0, block upper bound 0 — so WAND interval
@@ -239,8 +395,7 @@ def _shard_search(
             # filter), AND across (one group per field).
             scoring_slots = list(range(len(tp)))
             fgs = []
-            absent = False
-            for grp in filter_groups:
+            for grp in q.filter_groups:
                 slots: list[int] = []
                 for ft in grp:
                     plist = postings.get(ft)
@@ -248,65 +403,49 @@ def _shard_search(
                         slots.extend(range(len(tp), len(tp) + len(plist)))
                         tp.extend(plist)
                 if not slots:
-                    absent = True
-                    break
+                    return _NO_HITS  # no doc in this shard carries the value
                 fgs.append(slots)
-            if absent:
-                return _NO_HITS  # no doc in this shard carries the field value
             required = (required or []) + fgs
             # qualification must count SCORING slots only: a filter entry
             # (contribution 0) may neither satisfy min_match nor surface
-            # a doc with no scoring match as a score-0 result
-            if req_toks or chain_specs:
-                pass  # must/chain clauses already force a scoring match;
-                # an explicit min_match kept its should-slot universe
-            elif mm_slots is None:
+            # a doc with no scoring match as a score-0 result. Must/chain
+            # clauses already force a scoring match, and an explicit
+            # min_match kept its should-slot universe.
+            if not boolean and mm_slots is None:
                 mm_slots = scoring_slots
                 mm = max(mm, 1)
         # per-query NOT terms ride the tombstone machinery: their shard-
         # local doc ids union with the global deletes, applied pre-heap,
         # so θ tracks the k-th QUALIFIED score and pruning stays exact
         dels_q = deleted
-        if excl_terms:
-            arrs = [a for t in excl_terms
-                    if (a := _excl_ids(t)) is not None and len(a)]
-            if arrs:
-                ex = arrs[0] if len(arrs) == 1 else np.unique(np.concatenate(arrs))
-                dels_q = (ex if dels_q is None or not len(dels_q)
-                          else np.union1d(dels_q, ex))
+        ex = _excl_ids(q.exclude)
+        if ex is not None:
+            dels_q = (ex if dels_q is None or not len(dels_q)
+                      else np.union1d(dels_q, ex))
         # boosting query (ES `boosting`): the negative terms' doc ids
         # decode through the SAME lazy exclusion cache (ids only, no
         # tf/dl) — demotion is exclusion's softer sibling
-        demote = None
-        if demote_spec is not None:
-            neg_terms, nb = demote_spec
-            arrs = [a for t in neg_terms
-                    if (a := _excl_ids(t)) is not None and len(a)]
-            if arrs:
-                ids_d = (arrs[0] if len(arrs) == 1
-                         else np.unique(np.concatenate(arrs)))
-                demote = (ids_d, nb)
+        ids_d = _excl_ids(q.demote_terms)
+        demote = None if ids_d is None else (ids_d, q.demote_factor)
         return shard_topk(tp, k, avgdl, k1, b, prune=prune,
                           deleted=dels_q, allowed=allowed,
                           min_match=mm, min_match_slots=mm_slots,
                           required=required, chains=chains,
-                          after=after, dismax_tb=dismax_tb,
+                          after=q.after, dismax_tb=q.dismax_tb,
                           demote=demote)
 
     # identical specs in one batch compute ONCE (batches routinely repeat
-    # queries — common-subexpression elimination across the batch): the
-    # normalized spec tuples are plain python values, so identical specs
-    # repr identically and the memo key is exact; results are reused by
-    # reference and only the query_id label differs. No semantic change —
-    # a duplicated spec's rows were already byte-identical by determinism.
+    # queries — common-subexpression elimination across the batch): a
+    # QuerySpec is frozen and hashable over its normalized fields, so the
+    # memo keys on the spec itself; results are reused by reference and
+    # only the query_id label differs. No semantic change — a duplicated
+    # spec's rows were already byte-identical by determinism.
     out_q, out_d, out_s = [], [], []
-    memo: dict[str, tuple] = {}
+    memo: dict[QuerySpec, tuple] = {}
     for qid, spec in enumerate(queries):
-        key = repr(spec)
-        res = memo.get(key)
+        res = memo.get(spec)
         if res is None:
-            res = _run_query(*spec)
-            memo[key] = res
+            res = memo[spec] = _run_query(spec)
         ids, scores = res
         if len(ids):
             out_q.append(np.full(len(ids), qid, np.int32))
@@ -444,19 +583,67 @@ def _parse_prefix_terms(
             wilds.append(w)
         elif is_prefix or fm:
             raw = w.rstrip("*") if fm is None else fm.group("stem")
-            st = tokenize_py(raw, unicode=unicode)
-            if len(st) != 1:
-                raise ValueError(
-                    f"expansion token {w!r} must reduce to exactly one "
-                    "index token"
-                )
+            st = _one_token(raw, unicode, f"expansion token {w!r} must "
+                            "reduce to exactly one index token")
             if fm is None:
-                stems.append(st[0])
+                stems.append(st)
             else:
-                fuzz.append((st[0], int(fm.group("dist") or 1)))
+                fuzz.append((st, int(fm.group("dist") or 1)))
         else:
             plains.extend(tokenize_py(w, unicode=unicode))
     return plains, stems, fuzz, wilds, regexes
+
+
+def _expand(store: SnapshotStore, version: int | None, pats: list,
+            cache: dict, cap: int, key, matcher, cond, use_vocab: bool,
+            total_err, one_err) -> dict:
+    """Expand dictionary patterns of one kind against the index
+    DICTIONARY (the stats table) → {pattern: [terms]}: ONE scan with the
+    OR of every missing pattern's pushed-down predicate `cond(p)` serves
+    the whole batch — or, when `use_vocab` and the snapshot's full
+    dictionary is cached, a zero-job filter of it (same candidate set).
+    Field terms ('lang:en') are filter vocabulary, not dictionary words,
+    so they never match. The driver-side `matcher(p)` attributes the
+    shared rows to each pattern and is the authority either way. Each
+    pattern expands to at most `cap` terms — a one-letter prefix over a
+    web-scale vocabulary is a user error, not a job to run (Lucene's
+    maxClauseCount) — and each expanded term scores with its OWN idf
+    (Lucene's scoring-boolean rewrite): the idfs and each pattern's term
+    list (under the tokenizer-unreachable `key(p)`) seed the same
+    per-snapshot cache the plain lookup uses."""
+    from functools import reduce
+    from operator import or_
+
+    missing = [p for p in pats if key(p) not in cache]
+    if missing:
+        total_cap = cap * len(missing)
+        vocab = _cached_vocab(cache) if use_vocab else None
+        if vocab is not None:
+            ms = [matcher(p) for p in missing]
+            rows = [{"term": t, "idf": cache[t]} for t in vocab
+                    if ":" not in t and any(m(t) for m in ms)
+                    ][:total_cap + 1]
+        else:
+            rows = (
+                store.read("stats", version)
+                .filter(reduce(or_, [cond(p) for p in missing])
+                        & ~F.col("term").contains(":"))
+                .select("term", "idf")
+                .limit(total_cap + 1)
+                .collect()
+            )
+        if len(rows) > total_cap:
+            raise ValueError(total_err(total_cap, missing))
+        for p in missing:
+            m = matcher(p)
+            got = [(r["term"], float(r["idf"])) for r in rows
+                   if m(r["term"])]
+            if len(got) > cap:
+                raise ValueError(one_err(p, len(got)))
+            cache[key(p)] = [t for t, _ in got]
+            for t, i in got:
+                cache[t] = i
+    return {p: cache[key(p)] for p in pats}
 
 
 def _expand_stems(
@@ -466,58 +653,35 @@ def _expand_stems(
     cache: dict,
     cfg: EngineConfig,
 ) -> dict[str, list[str]]:
-    """Expand prefix stems against the index DICTIONARY (the stats table):
-    ONE scan with OR'd startswith predicates (parquet pushes
-    StringStartsWith, so only matching row groups are read) serves every
-    stem in the batch. Expansions are capped at cfg.max_prefix_expansion
-    per stem — a one-letter prefix over a web-scale vocabulary is a user
-    error, not a job to run. Expanded terms' idfs enter the same
-    per-snapshot cache the plain lookup uses (keyed '*stem' for the term
-    list; terms themselves never contain '*')."""
-    from functools import reduce
-    from operator import or_
-
+    """Prefix stems ('tok*'): OR'd startswith predicates (parquet pushes
+    StringStartsWith, so only matching row groups are read), capped at
+    cfg.max_prefix_expansion per stem; cache key '*stem' (terms never
+    contain '*')."""
     cap = cfg.max_prefix_expansion
-    missing = [s for s in stems if ("*" + s) not in cache]
-    if missing:
-        total_cap = cap * len(missing)
-        vocab = _cached_vocab(cache)
-        if vocab is not None:
-            # full dictionary already on the driver: expand with ZERO
-            # Spark jobs (same candidate set the scan would return)
-            rows = [{"term": t, "idf": cache[t]} for t in vocab
-                    if ":" not in t and any(t.startswith(s) for s in missing)
-                    ][:total_cap + 1]
-        else:
-            # field terms ('lang:en') are filter vocabulary, not dictionary
-            # words — a stem like 'lang' must not expand into them
-            cond = reduce(or_, [F.col("term").startswith(s) for s in missing])
-            cond = cond & ~F.col("term").contains(":")
-            rows = (
-                store.read("stats", version)
-                .filter(cond)
-                .select("term", "idf")
-                .limit(total_cap + 1)
-                .collect()
-            )
-        if len(rows) > total_cap:
-            raise ValueError(
-                f"prefix expansion exceeds {total_cap} terms for stems "
-                f"{missing}; narrow the prefix or raise "
-                "EngineConfig.max_prefix_expansion"
-            )
-        for s in missing:
-            got = [(r["term"], float(r["idf"])) for r in rows
-                   if r["term"].startswith(s)]
-            if len(got) > cap:
-                raise ValueError(
-                    f"prefix '{s}*' expands to {len(got)} terms "
-                    f"(> max_prefix_expansion={cap}); narrow the prefix"
-                )
-            cache["*" + s] = [t for t, _ in got]
-            for t, i in got:
-                cache[t] = i
-    return {s: cache["*" + s] for s in stems}
+    return _expand(
+        store, version, stems, cache, cap, lambda s: "*" + s,
+        lambda s: lambda t: t.startswith(s),
+        lambda s: F.col("term").startswith(s), True,
+        lambda total, missing: (
+            f"prefix expansion exceeds {total} terms for stems "
+            f"{missing}; narrow the prefix or raise "
+            "EngineConfig.max_prefix_expansion"),
+        lambda s, n: (
+            f"prefix '{s}*' expands to {n} terms "
+            f"(> max_prefix_expansion={cap}); narrow the prefix"))
+
+
+def _lev(a: str, b: str) -> int:
+    """Edit distance — a tiny driver-side verify over the ≤cap collected
+    rows only (attributing shared scan rows to the right stem)."""
+    prev = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        cur = [i]
+        for j, cb in enumerate(b, 1):
+            cur.append(min(prev[j] + 1, cur[-1] + 1,
+                           prev[j - 1] + (ca != cb)))
+        prev = cur
+    return prev[-1]
 
 
 def _expand_fuzzy(
@@ -527,72 +691,36 @@ def _expand_fuzzy(
     cache: dict,
     cfg: EngineConfig,
 ) -> dict[tuple[str, int], list[str]]:
-    """Expand fuzzy terms ("tok~", "tok~2") against the index DICTIONARY:
-    every index term within edit distance d of the stem (the stem itself
-    included, like Lucene's FuzzyQuery). ONE scan serves the whole batch:
-    a pushed-down length window (|len(term) − len(stem)| ≤ d — a necessary
-    condition for edit distance ≤ d) prunes most of the dictionary before
-    the JVM-side `levenshtein` verifies exactly; no Python runs per term.
-    The dictionary is vocabulary-sized (terms, not docs), so even at
-    10^12 turns the scan is the small side of the workload. Expansions
-    cap at cfg.max_fuzzy_expansion per stem — same maxClauseCount
-    reasoning as prefixes — and each expanded term scores with its OWN
-    idf (Lucene's scoring-boolean rewrite)."""
-    from functools import reduce
-    from operator import or_
-
+    """Fuzzy terms ("tok~", "tok~2"): every index term within edit
+    distance d of the stem (the stem itself included, like Lucene's
+    FuzzyQuery). A pushed-down length window (|len(term) − len(stem)| ≤
+    d — a necessary condition for edit distance ≤ d) prunes most of the
+    dictionary before the JVM-side `levenshtein` verifies exactly; no
+    Python runs per term. The dictionary is vocabulary-sized (terms, not
+    docs), so even at 10^12 turns the scan is the small side of the
+    workload. Capped at cfg.max_fuzzy_expansion per stem; cache key
+    '~d:stem'."""
     cap = cfg.max_fuzzy_expansion
 
-    def key(s: str, d: int) -> str:
-        return f"~{d}:{s}"
+    def matcher(fz):
+        s, d = fz
+        return lambda t: abs(len(t) - len(s)) <= d and _lev(t, s) <= d
 
-    missing = [(s, d) for s, d in fuzz if key(s, d) not in cache]
-    if missing:
-        cond = reduce(or_, [
-            F.length("term").between(len(s) - d, len(s) + d)
-            & (F.levenshtein(F.col("term"), F.lit(s)) <= d)
-            for s, d in missing
-        ]) & ~F.col("term").contains(":")  # field terms aren't dictionary words
-        total_cap = cap * len(missing)
-        rows = (
-            store.read("stats", version)
-            .filter(cond)
-            .select("term", "idf")
-            .limit(total_cap + 1)
-            .collect()
-        )
-        if len(rows) > total_cap:
-            raise ValueError(
-                f"fuzzy expansion exceeds {total_cap} terms for "
-                f"{missing}; shorten the distance or raise "
-                "EngineConfig.max_fuzzy_expansion"
-            )
+    def cond(fz):
+        s, d = fz
+        return (F.length("term").between(len(s) - d, len(s) + d)
+                & (F.levenshtein(F.col("term"), F.lit(s)) <= d))
 
-        def _lev(a: str, b: str) -> int:
-            # tiny driver-side verify over the ≤cap collected rows only
-            # (attributing shared scan rows to the right stem)
-            prev = list(range(len(b) + 1))
-            for i, ca in enumerate(a, 1):
-                cur = [i]
-                for j, cb in enumerate(b, 1):
-                    cur.append(min(prev[j] + 1, cur[-1] + 1,
-                                   prev[j - 1] + (ca != cb)))
-                prev = cur
-            return prev[-1]
-
-        for s, d in missing:
-            got = [(r["term"], float(r["idf"])) for r in rows
-                   if abs(len(r["term"]) - len(s)) <= d
-                   and _lev(r["term"], s) <= d]
-            if len(got) > cap:
-                raise ValueError(
-                    f"fuzzy '{s}~{d}' expands to {len(got)} terms "
-                    f"(> max_fuzzy_expansion={cap}); narrow it"
-                )
-            cache[key(s, d)] = [t for t, _ in got]
-            for t, i in got:
-                cache[t] = i
-    return {(s, d): cache[key(s, d)] for s, d in fuzz}
+    return _expand(
+        store, version, fuzz, cache, cap, lambda fz: "~{1}:{0}".format(*fz),
+        matcher, cond, False,
+        lambda total, missing: (
+            f"fuzzy expansion exceeds {total} terms for "
+            f"{missing}; shorten the distance or raise "
+            "EngineConfig.max_fuzzy_expansion"),
+        lambda fz, n: (
+            "fuzzy '{}~{}' expands to {} terms (> max_fuzzy_expansion="
+            "{}); narrow it".format(*fz, n, cap)))
 
 
 def _expand_wildcards(
@@ -602,65 +730,525 @@ def _expand_wildcards(
     cache: dict,
     cfg: EngineConfig,
 ) -> dict[str, list[str]]:
-    """Expand wildcard patterns ('*' = any run, '?' = one char, anywhere
-    in the word — Lucene WildcardQuery) against the index DICTIONARY:
-    ONE stats-table scan with OR'd LIKE predicates serves every pattern
-    in the batch. Leading/infix wildcards cannot push a prefix down, so
-    the scan reads the whole (dictionary-sized, term-sorted) stats table
-    — the same cost Lucene documents for leading wildcards; the corpus
-    itself is never touched. Tokens contain no '%'/'_' in either
-    tokenizer mode, so '*'→'%' / '?'→'_' is escape-free. Same
-    max_prefix_expansion cap and per-snapshot idf-cache seeding as
-    prefix stems (keyed '*pattern'; patterns always contain a wildcard
+    """Wildcard patterns ('*' = any run, '?' = one char, anywhere in the
+    word — Lucene WildcardQuery): OR'd LIKE predicates. Leading/infix
+    wildcards cannot push a prefix down, so the scan reads the whole
+    (dictionary-sized, term-sorted) stats table — the same cost Lucene
+    documents for leading wildcards; the corpus itself is never touched.
+    Tokens contain no '%'/'_' in either tokenizer mode, so '*'→'%' /
+    '?'→'_' is escape-free. Same max_prefix_expansion cap as prefix
+    stems; cache key '*pattern' (patterns always contain a wildcard
     char, so stem keys can't collide)."""
     import fnmatch
-    from functools import reduce
-    from operator import or_
 
     cap = cfg.max_prefix_expansion
-    missing = [p for p in pats if ("*" + p) not in cache]
-    if missing:
-        total_cap = cap * len(missing)
-        vocab = _cached_vocab(cache)
-        if vocab is not None:
-            # full dictionary on the driver: fnmatch (the attribution
-            # authority below either way) filters it with zero Spark jobs
-            rows = [{"term": t, "idf": cache[t]} for t in vocab
-                    if ":" not in t
-                    and any(fnmatch.fnmatchcase(t, p) for p in missing)
-                    ][:total_cap + 1]
-        else:
-            cond = reduce(or_, [
-                F.col("term").like(p.replace("*", "%").replace("?", "_"))
-                for p in missing]) & ~F.col("term").contains(":")
-            # ^ field terms aren't dictionary words: '*ow' must not match
-            # a hypothetical 'lang:yellow' posting
-            rows = (
-                store.read("stats", version)
-                .filter(cond)
-                .select("term", "idf")
-                .limit(total_cap + 1)
-                .collect()
-            )
-        if len(rows) > total_cap:
-            raise ValueError(
-                f"wildcard expansion exceeds {total_cap} terms for "
-                f"patterns {missing}; narrow them or raise "
-                "EngineConfig.max_prefix_expansion"
-            )
-        for p in missing:
-            got = [(r["term"], float(r["idf"])) for r in rows
-                   if fnmatch.fnmatchcase(r["term"], p)]
-            if len(got) > cap:
-                raise ValueError(
-                    f"wildcard {p!r} expands to {len(got)} terms "
-                    f"(> max_prefix_expansion={cap}); narrow it"
-                )
-            cache["*" + p] = [t for t, _ in got]
-            for t, i in got:
-                cache[t] = i
-    return {p: cache["*" + p] for p in pats}
+    return _expand(
+        store, version, pats, cache, cap, lambda p: "*" + p,
+        lambda p: lambda t: fnmatch.fnmatchcase(t, p),
+        lambda p: F.col("term").like(p.replace("*", "%").replace("?", "_")),
+        True,
+        lambda total, missing: (
+            f"wildcard expansion exceeds {total} terms for "
+            f"patterns {missing}; narrow them or raise "
+            "EngineConfig.max_prefix_expansion"),
+        lambda p, n: (
+            f"wildcard {p!r} expands to {n} terms "
+            f"(> max_prefix_expansion={cap}); narrow it"))
 
+
+def _expand_regex(
+    store: SnapshotStore,
+    version: int | None,
+    pats: list[str],
+    cache: dict,
+    cfg: EngineConfig,
+) -> dict[str, list[str]]:
+    """Whole-term regex patterns ('/pat/' — Lucene RegexpQuery: the
+    pattern must match the ENTIRE term): OR'd anchored rlike predicates.
+    Like leading wildcards, a regex cannot push a prefix down, so the
+    scan reads the (dictionary-sized, term-sorted) stats table; the
+    corpus is never touched. Matching a cached dictionary with Python re
+    (the attribution authority either way) also closes the JVM-vs-Python
+    pre-filter asymmetry for non-portable patterns. Same
+    max_prefix_expansion cap; cache key '/pattern'."""
+    cap = cfg.max_prefix_expansion
+    return _expand(
+        store, version, pats, cache, cap, lambda p: "/" + p,
+        lambda p: re.compile(f"^(?:{p})$").match,
+        lambda p: F.col("term").rlike(f"^(?:{p})$"), True,
+        lambda total, missing: (
+            f"regex expansion exceeds {total} terms for "
+            f"{missing}; narrow the pattern or raise "
+            "EngineConfig.max_prefix_expansion"),
+        lambda p, n: (
+            f"regex '/{p}/' expands to {n} terms "
+            f"(> max_prefix_expansion={cap}); narrow it"))
+
+
+# ---- stage 1: normalize ----------------------------------------------------
+
+def _norm_boosts(bo) -> dict[str, float] | None:
+    if not bo:
+        return None
+    out = {}
+    for key, w in bo.items():
+        w = float(w)
+        if not w > 0:
+            raise ValueError(
+                f"boost weight for {key!r} must be > 0 (got {w}): "
+                "block-max pruning scales its bounds by the boost, "
+                "which is only an upper bound for positive weights")
+        out[key] = w
+    return out
+
+
+def _norm_phrases(ph) -> list[tuple[str, int | None, bool]]:
+    """Positional clauses of a boolean query: each a string (exact
+    phrase), a (text, window) / (text, window, unordered) tuple, or a
+    dict {text, window, unordered}. window=None → exact adjacency;
+    a windowed clause defaults to unordered=True (Lucene "..."~N slop
+    is order-free)."""
+    out: list[tuple[str, int | None, bool]] = []
+    for p in (ph or []):
+        if isinstance(p, str):
+            out.append((p, None, False))
+        elif isinstance(p, dict):
+            w = p.get("window")
+            out.append((p["text"], None if w is None else int(w),
+                        bool(p.get("unordered", w is not None))))
+        else:
+            parts = tuple(p)
+            w = parts[1] if len(parts) > 1 else None
+            unord = (bool(parts[2]) if len(parts) > 2
+                     else w is not None)
+            out.append((parts[0], None if w is None else int(w), unord))
+    return out
+
+
+def _norm_dismax(sm, tb) -> float | None:
+    """score_mode/tie_breaker → dismax_tb (None = plain sum)."""
+    if sm not in ("sum", "dismax"):
+        raise ValueError(
+            f"unknown score_mode {sm!r}; valid: 'sum', 'dismax'")
+    if sm == "sum":
+        return None
+    tb = float(tb)
+    if not 0.0 <= tb <= 1.0:
+        raise ValueError(
+            f"tie_breaker must be in [0, 1] (got {tb}): the WAND "
+            "bound argument (dismax ≤ sum) needs tb ≤ 1, and a "
+            "negative tb is not a score combiner")
+    return tb
+
+
+def _norm_negative(neg, nb) -> tuple[str, float] | None:
+    """negative/negative_boost → (text, factor); None = no demotion."""
+    if neg is None:
+        return None
+    nb = float(nb)
+    if not 0.0 < nb <= 1.0:
+        raise ValueError(
+            f"negative_boost must be in (0, 1] (got {nb}): the WAND "
+            "bound argument (demoted ≤ undemoted ≤ block bounds) "
+            "needs nb ≤ 1, and nb ≤ 0 is exclusion, not demotion — "
+            "use exclude/fields_not for that")
+    return (str(neg), nb)
+
+
+def _norm_fieldspec(fd) -> dict[str, list[str]] | None:
+    """fields / fields_not: {field: value | [values]} → {field:
+    [values]}; tokenization (pinned index mode) happens later with
+    the other token normalization."""
+    if fd is None:
+        return None
+    if not isinstance(fd, dict) or not fd:
+        raise ValueError(
+            "fields/fields_not must be a non-empty dict "
+            "{field: value | [values]}")
+    out: dict[str, list[str]] = {}
+    for f, v in fd.items():
+        vals = list(v) if isinstance(v, (list, tuple, set)) else [v]
+        if not vals:
+            raise ValueError(f"field {f!r} has an empty value list")
+        out[str(f)] = [str(x) for x in sorted(map(str, vals))]
+    return out
+
+
+def _one_token(word: str, uni: bool, err: str) -> str:
+    """The one index token `word` reduces to; ValueError(err) otherwise."""
+    ts = tokenize_py(word, unicode=uni)
+    if len(ts) != 1:
+        raise ValueError(err)
+    return ts[0]
+
+
+def _field_terms(fd: dict[str, list[str]], what: str, uni: bool,
+                 meta: dict) -> dict[str, list[str]]:
+    """{field: [values]} → {field: ['field:tok', ...]} with the
+    pinned tokenizer; validates against the index's field schema."""
+    idx_fields = set(meta.get("field_cols") or [])
+    unknown = sorted(set(fd) - idx_fields)
+    if unknown:
+        raise ValueError(
+            f"{what} names field(s) {unknown} the index was not "
+            f"built with (IndexConfig.field_cols={sorted(idx_fields)})")
+    return {f: sorted({
+        f + ":" + _one_token(v, uni, f"{what} value {v!r} for field {f!r} "
+                             "must tokenize to exactly one token (multi-"
+                             "token field matching would need phrase "
+                             "semantics)")
+        for v in vals}) for f, vals in fd.items()}
+
+
+def _query_options(q, call: dict) -> dict:
+    """One query in any spelling → its options: the call-level options,
+    overridden by whatever the query sets. A (text, mode, near_window)
+    tuple's None or missing slots inherit; so do a dict's unset keys."""
+    if isinstance(q, str):
+        o = {**call, "text": q}
+    elif isinstance(q, dict):
+        o = {**call, "text": "", **q}
+    else:
+        parts = tuple(q)
+        o = {**call, "text": parts[0]}
+        if len(parts) > 1:
+            o["mode"] = parts[1]
+        if len(parts) > 2 and parts[2] is not None:
+            o["near_window"] = parts[2]
+    o["mode"] = o["mode"] or call["mode"]
+    return o
+
+
+def _normalize(queries: list, call: dict, meta: dict) -> list[QuerySpec]:
+    """Stage 1: every query → its QuerySpec. `call` holds the call-level
+    options under their per-query dict keys. No Spark."""
+    opts = [_query_options(q, call) for q in queries]
+    bad = sorted({o["mode"] for o in opts if o["mode"] not in _MODES})
+    if bad:
+        raise ValueError(f"unknown search mode(s) {bad}; valid: {_MODES}")
+    return [QuerySpec.from_options(o, meta) for o in opts]
+
+
+# ---- stage 2: resolve terms -------------------------------------------------
+
+def _resolve_terms(
+    store: SnapshotStore, version: int | None, specs: list[QuerySpec],
+    cache: dict, cfg: EngineConfig, meta: dict,
+) -> tuple[list[QuerySpec], dict[str, float]] | None:
+    """Stage 2: expansions folded into each spec's terms, boost keys
+    checked, and the idf of every scored term → (specs, idf_map); None
+    when no scoring term is live (the result is empty). Raises before
+    the search job when a value read from disk could not score: a
+    non-finite avgdl or idf would reach the final sort, where the pandas
+    (NaN last) and Spark (NaN first) plans order it differently."""
+    avgdl = float(meta["avgdl"])
+    if not (math.isfinite(avgdl) and avgdl > 0):
+        raise ValueError(
+            f"snapshot avgdl is {avgdl!r}: BM25 needs a finite avgdl > 0 "
+            "(corrupt index metadata — rebuild the index)")
+    # ONE dictionary scan per expansion kind serves the whole batch
+    # (none at all when the kind is unused or already cached)
+    stems = _expand_stems(store, version, sorted(
+        {x for s in specs for x in s.stems}), cache, cfg)
+    fuzzy = _expand_fuzzy(store, version, sorted(
+        {x for s in specs for x in s.fuzzy}), cache, cfg)
+    wilds = _expand_wildcards(store, version, sorted(
+        {x for s in specs for x in s.wildcards}), cache, cfg)
+    regexes = _expand_regex(store, version, sorted(
+        {x for s in specs for x in s.regexes}), cache, cfg)
+    specs = [replace(s, terms=tuple(sorted(set(s.terms).union(
+        *(stems[x] for x in s.stems), *(fuzzy[x] for x in s.fuzzy),
+        *(wilds[x] for x in s.wildcards), *(regexes[x] for x in s.regexes)))))
+        if s.stems or s.fuzzy or s.wildcards or s.regexes else s
+        for s in specs]
+    # boost keys must name actual query terms (post-expansion; corpus-
+    # absent query terms still count — the boost is then a no-op, but
+    # the user DID type that term). A stray key is a typo, not a no-op.
+    for s in specs:
+        stray = sorted({t for t, _ in s.boosts} - s.scored_terms)
+        if stray:
+            raise ValueError(
+                f"boost keys {stray} are not terms of their query "
+                f"(terms: {sorted(s.scored_terms)})")
+    all_terms = sorted(set().union(*(s.scored_terms for s in specs)))
+    if not all_terms:
+        return None
+    # idf lookup: small vocabularies resolve from the one-shot full
+    # dictionary cache (zero jobs after the first probe); big ones fall
+    # back to a pushdown isin filter on the term-sorted stats parquet —
+    # query-sized result, tiny collect. Expansions pre-seeded the cache,
+    # so they cost no extra job.
+    missing = [t for t in all_terms if t not in cache]
+    if missing:
+        _idf_lookup(store, version, cache, cfg, missing)
+    idf_map = {t: cache[t] for t in all_terms if cache[t] is not None}
+    if not idf_map:
+        # no scoring term is live: a fielded filter alone never
+        # surfaces a doc (filter clauses score 0 by definition)
+        return None
+    bad = sorted(t for t, v in idf_map.items() if not math.isfinite(v))
+    if bad:
+        raise ValueError(
+            f"non-finite idf for terms {bad} (corrupt stats table — "
+            "rebuild the index)")
+    # fielded-filter terms enter the scan and the shard postings with a
+    # PINNED idf of 0.0 — never their stats-table idf (they must not
+    # score) and never through the shared cache (which holds real idfs)
+    for s in specs:
+        for grp in s.filter_groups:
+            for t in grp:
+                idf_map[t] = 0.0
+    return specs, idf_map
+
+
+# ---- stage 3: choose the physical plan --------------------------------------
+
+class _Plan(NamedTuple):
+    kind: str  # "single" | "distributed" | "cogroup"
+    deleted: np.ndarray | None  # broadcast forms: sorted tombstones
+    allowed: np.ndarray | None  # broadcast forms: sorted keep-list
+    aux: DataFrame | None  # cogroup: tagged deletes ∪ keep-list by shard
+    has_filter: bool
+
+
+def _choose_plan(
+    spark: SparkSession, store: SnapshotStore, version: int | None,
+    meta: dict, cfg: EngineConfig, filter_df: DataFrame | None, allowed_ids,
+) -> _Plan:
+    """Stage 3: which physical plan scores this call, and the delete /
+    keep-list state it ships.
+
+    Tombstoned ids (delete support; hora's has_deletion check,
+    hnsw_idx.rs:235-237) and the filter's keep-list are applied INSIDE
+    the shard UDF, before top-k selection, so survivors' scores and ranks
+    are exact. Two physical forms, identical results:
+    - small sets (≤ cfg.max_broadcast_deletes, per meta's n_deletes
+      upper bound): collected to sorted arrays and shipped to every task
+      (the single-task or distributed plan);
+    - large sets (bulk purges): NEVER collected — doc-range sharding
+      means doc_id // shard_size IS the shard key, so each shard's
+      tombstones cogroup with its segment rows (the cogroup plan) and no
+      driver state grows with the delete volume."""
+    n_del = int(meta.get("n_deletes", 0))
+    allow_pre = None
+    if allowed_ids is not None:
+        if filter_df is not None:
+            raise ValueError("pass filter_df or allowed_ids, not both")
+        allow_pre = np.unique(np.asarray(list(allowed_ids), dtype=np.int64))
+        if len(allow_pre) > cfg.max_broadcast_deletes:
+            raise ValueError(
+                f"allowed_ids holds {len(allow_pre)} ids (> "
+                f"max_broadcast_deletes={cfg.max_broadcast_deletes}); "
+                "pass a filter_df instead — the driver-resident fast "
+                "path exists for config-bounded windows only")
+    has_filter = filter_df is not None or allow_pre is not None
+    allow_rows = None
+    if filter_df is not None:
+        filter_df = filter_df.select(
+            F.col(filter_df.columns[0]).cast("long").alias("doc_id"))
+        # ONE size-probe job: collect up to ceiling+1 ids. Small filters
+        # get their broadcast array from this same collect (no separate
+        # count job); an over-ceiling probe aborts early via the limit.
+        allow_rows = filter_df.limit(cfg.max_broadcast_deletes + 1).collect()
+    big = ((n_del > cfg.max_broadcast_deletes and store.exists("deletes", version))
+           or (allow_rows is not None
+               and len(allow_rows) > cfg.max_broadcast_deletes))
+    if big:
+        # either auxiliary set is too large to broadcast → ship BOTH as
+        # one tagged table cogrouped by shard. Exact integer DIV,
+        # bit-identical to the build's numpy `ids // shard_size` — a
+        # double-precision `/` would round the quotient near 2^53 and
+        # silently map a row to the wrong shard (this path exists
+        # precisely for the huge-corpus case).
+        shard_size = int(meta["shard_size"])
+        shard_col = F.expr(
+            f"CAST(CAST(doc_id AS BIGINT) DIV {shard_size} AS INT)"
+        ).alias("shard_id")
+        aux = None
+        if store.exists("deletes", version):
+            aux = store.read("deletes", version).select(
+                F.col("doc_id").cast("long").alias("doc_id"),
+                F.lit(1).alias("is_del"))
+        if has_filter:
+            if filter_df is None:  # driver-resident keep-list, tiny
+                filter_df = spark.createDataFrame(
+                    [(int(i),) for i in allow_pre], "doc_id long")
+            fa = filter_df.select("doc_id", F.lit(0).alias("is_del"))
+            aux = fa if aux is None else aux.unionByName(fa)
+        return _Plan("cogroup", None, None,
+                     aux.select("doc_id", "is_del", shard_col), has_filter)
+    del_arr = store.deleted_ids(version)
+    allow_arr = allow_pre
+    if allow_arr is None and has_filter:
+        allow_arr = np.unique(np.array(
+            [r["doc_id"] for r in allow_rows], np.int64))
+
+    # SMALL-INDEX FAST PATH: when the whole segments table is at most
+    # cfg.max_single_task_scan_bytes on disk, coalesce the scan to
+    # one task and do the shard grouping inside it — scan, WAND, and
+    # the top-k merge become a single Exchange-free stage (the two
+    # shuffles of the distributed plan are pure overhead at this
+    # size). The byte check is one cached getContentSummary per
+    # immutable data dir; the shard-count pre-gate keeps that call
+    # cheap on a NameNode even for pathological layouts. Real
+    # corpora exceed the ceiling and keep the distributed plan.
+    single = False
+    n_sh = int(meta.get("n_shards") or 0)
+    if cfg.max_single_task_scan_bytes > 0 and 0 < n_sh <= 1024:
+        try:
+            tb = store.table_bytes("segments", version)
+        except Exception:
+            tb = None
+        single = tb is not None and tb <= cfg.max_single_task_scan_bytes
+    return _Plan("single" if single else "distributed", del_arr, allow_arr,
+                 None, has_filter)
+
+
+# ---- stage 4: run -----------------------------------------------------------
+
+def _run(
+    spark: SparkSession, store: SnapshotStore, version: int | None,
+    meta: dict, cfg: EngineConfig, plan: _Plan, specs: list[QuerySpec],
+    idf_map: dict[str, float], k: int | None, prune: bool,
+) -> DataFrame:
+    """Stage 4: the pushed-down segment scan and the per-shard WAND UDF
+    of `plan` → per-shard results (the single-task plan: already merged).
+
+    store_dl=True (default): the scan reads strictly query-term rows
+    (positive terms plus any per-query NOT terms — exclusion postings
+    ride the same pushed-down IN filter; only their doc ids decode).
+    store_dl=False layout: postings carry no dl, so the reserved norms
+    row rides in the same pushed-down scan (one extra row per shard)."""
+    avgdl = float(meta["avgdl"])
+    k1, b = cfg.bm25.k1, cfg.bm25.b
+    live_terms = sorted(idf_map)
+    scan_terms = live_terms + sorted(
+        {t for s in specs for t in s.id_terms} - set(live_terms))
+    if not bool(meta.get("store_dl", True)):
+        scan_terms = scan_terms + [NORMS_TERM]
+    seg_cols = ["shard_id", "term", "doc_blocks", "tf_blocks", "dl_blocks",
+                "block_last", "block_tf_max", "block_dl_min"]
+    if any(s.mode in POSITIONAL_MODES or s.chains for s in specs):
+        seg_cols.append("pos_blocks")  # read ONLY when some query needs them
+    segs = (
+        store.read("segments", version)
+        .filter(F.col("term").isin(scan_terms))
+        .select(*seg_cols)
+    )
+
+    if plan.kind == "cogroup":
+        has_filter = plan.has_filter
+        b_queries = spark.sparkContext.broadcast(specs)
+        b_idf = spark.sparkContext.broadcast(idf_map)
+
+        def run_cg(seg_pdf: pd.DataFrame, aux_pdf: pd.DataFrame) -> pd.DataFrame:
+            dels = None
+            # a shard with NO filter rows under an active filter allows
+            # nothing (empty array ≠ None = no filter)
+            alw = np.empty(0, np.int64) if has_filter else None
+            if len(aux_pdf):
+                tag = aux_pdf["is_del"].to_numpy()
+                ids_np = aux_pdf["doc_id"].to_numpy(np.int64)
+                d = ids_np[tag == 1]
+                if len(d):
+                    dels = np.unique(d)
+                if has_filter:
+                    alw = np.unique(ids_np[tag == 0])
+            return _shard_search(seg_pdf, b_queries.value, b_idf.value, k,
+                                 avgdl, k1, b, prune, deleted=dels,
+                                 allowed=alw)
+
+        return (
+            segs.groupby("shard_id").cogroup(plan.aux.groupby("shard_id"))
+            .applyInPandas(run_cg, RESULT_SCHEMA)
+        )
+
+    del_arr, allow_arr = plan.deleted, plan.allowed
+    if plan.kind == "single":
+        # ONE task: the query state (specs/idf/deletes/keep-list) is
+        # query-sized and rides the task closure — four explicit
+        # broadcast variables would only add py4j round trips here
+        # (the distributed plans keep their broadcasts).
+        def run_one(batches):
+            parts = [p for p in batches if len(p)]
+            if not parts:
+                return
+            pdf = pd.concat(parts, ignore_index=True)
+            outs = []
+            for _, g in pdf.groupby("shard_id", sort=False):
+                out = _shard_search(
+                    g, specs, idf_map, k, avgdl, k1, b,
+                    prune, deleted=del_arr, allowed=allow_arr)
+                if len(out):
+                    outs.append(out)
+            if outs:
+                yield from _merge_frames(outs, k)
+
+        return segs.coalesce(1).mapInPandas(run_one, RESULT_SCHEMA)
+
+    b_queries = spark.sparkContext.broadcast(specs)
+    b_idf = spark.sparkContext.broadcast(idf_map)
+    b_del = spark.sparkContext.broadcast(del_arr)
+    b_allow = spark.sparkContext.broadcast(allow_arr)
+
+    def run(seg_pdf: pd.DataFrame) -> pd.DataFrame:
+        return _shard_search(seg_pdf, b_queries.value, b_idf.value, k,
+                             avgdl, k1, b, prune, deleted=b_del.value,
+                             allowed=b_allow.value)
+
+    return segs.groupBy("shard_id").applyInPandas(run, RESULT_SCHEMA)
+
+
+# ---- stage 5: merge ---------------------------------------------------------
+
+def _merge_frames(outs: list[pd.DataFrame], k: int | None):
+    """The single-task plan's merge, inside its one task: the global
+    per-query top-k and the final (query_id, score DESC, doc_id ASC)
+    order come from one local pandas sort, so no Window/row_number or
+    orderBy plan node exists. k=None (enumeration) stays unordered."""
+    if k is None:
+        yield from outs
+        return
+    allr = pd.concat(outs, ignore_index=True)
+    allr.sort_values(
+        ["query_id", "score", "doc_id"],
+        ascending=[True, False, True], kind="mergesort",
+        ignore_index=True, inplace=True)
+    yield allr.groupby("query_id", sort=False).head(k)
+
+
+def _merge(local: DataFrame, plan: _Plan, k: int | None, meta: dict,
+           n_queries: int) -> DataFrame:
+    """Stage 5: per-shard results → the global top-k per query, ordered
+    (query_id, score DESC, doc_id ASC).
+
+    k=None is match ENUMERATION: every qualifying doc with its exact
+    score, no global rank, no sort — shards are disjoint doc ranges, so
+    the union needs no dedup and downstream aggregation (facets,
+    counting, exports) keeps its partial/final shape. The single-task
+    plan already merged in its task (`_merge_frames`).
+
+    Otherwise per-shard output is ≤ k rows per query, so the merge input
+    is bounded by n_shards·|queries|·k rows — driver-computable from the
+    snapshot meta. When that bound is small the whole merge runs in ONE
+    single-partition task (one exchange; the per-query rank and the
+    global order come from a single local sort, and the separate
+    range-partitioned orderBy — with its sampling pass — disappears).
+    Large fan-ins (huge shard counts × batch sizes) keep the
+    two-exchange window plan, whose per-partition state never exceeds
+    one query's candidate set."""
+    if k is None or plan.kind == "single":
+        return local
+    n_shards = int(meta.get("n_shards") or 0)
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
+    if n_shards and n_shards * n_queries * k <= 2_000_000:
+        local = local.repartition(1)
+    return (
+        local.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .drop("rn")
+        .orderBy("query_id", F.desc("score"), F.asc("doc_id"))
+    )
 
 def search_topk(
     spark: SparkSession,
@@ -865,563 +1453,24 @@ def search_topk(
             f"no built index at {store.root!r}: run build first "
             "(the analog of searching an un-built hora index)"
         )
-    avgdl = float(meta["avgdl"])
-    k1, b = cfg.bm25.k1, cfg.bm25.b
-
-    # normalize to per-query (text, mode, near_window, exclude,
-    # min_match, prefix) specs; plain strings and missing slots inherit
-    # the call-level defaults. A dict spec may set any of the keys
-    # {text, mode, near_window, exclude, min_match, prefix}.
-    _VALID = ("any", "all") + POSITIONAL_MODES
-
-    def _norm_after(a) -> tuple[float, int] | None:
-        if a is None:
-            return None
-        s, d = a
-        return (float(s), int(d))
-
-    def _norm_boosts(bo) -> dict[str, float] | None:
-        if not bo:
-            return None
-        out = {}
-        for key, w in bo.items():
-            w = float(w)
-            if not w > 0:
-                raise ValueError(
-                    f"boost weight for {key!r} must be > 0 (got {w}): "
-                    "block-max pruning scales its bounds by the boost, "
-                    "which is only an upper bound for positive weights")
-            out[key] = w
-        return out
-
-    def _norm_syn(sy) -> dict[str, list] | None:
-        if not sy:
-            return None
-        return {key: ([vals] if isinstance(vals, str) else list(vals))
-                for key, vals in sy.items()}
-
-    def _norm_phrases(ph) -> list[tuple[str, int | None, bool]]:
-        """Positional clauses of a boolean query: each a string (exact
-        phrase), a (text, window) / (text, window, unordered) tuple, or a
-        dict {text, window, unordered}. window=None → exact adjacency;
-        a windowed clause defaults to unordered=True (Lucene "..."~N slop
-        is order-free)."""
-        out: list[tuple[str, int | None, bool]] = []
-        for p in (ph or []):
-            if isinstance(p, str):
-                out.append((p, None, False))
-            elif isinstance(p, dict):
-                w = p.get("window")
-                out.append((p["text"], None if w is None else int(w),
-                            bool(p.get("unordered", w is not None))))
-            else:
-                parts = tuple(p)
-                w = parts[1] if len(parts) > 1 else None
-                unord = (bool(parts[2]) if len(parts) > 2
-                         else w is not None)
-                out.append((parts[0], None if w is None else int(w), unord))
-        return out
-
-    def _norm_dismax(sm, tb) -> float | None:
-        """score_mode/tie_breaker → dismax_tb (None = plain sum)."""
-        if sm not in ("sum", "dismax"):
-            raise ValueError(
-                f"unknown score_mode {sm!r}; valid: 'sum', 'dismax'")
-        if sm == "sum":
-            return None
-        tb = float(tb)
-        if not 0.0 <= tb <= 1.0:
-            raise ValueError(
-                f"tie_breaker must be in [0, 1] (got {tb}): the WAND "
-                "bound argument (dismax ≤ sum) needs tb ≤ 1, and a "
-                "negative tb is not a score combiner")
-        return tb
-
-    def _norm_negative(neg, nb) -> tuple[str, float] | None:
-        """negative/negative_boost → (text, factor); None = no demotion."""
-        if neg is None:
-            return None
-        nb = float(nb)
-        if not 0.0 < nb <= 1.0:
-            raise ValueError(
-                f"negative_boost must be in (0, 1] (got {nb}): the WAND "
-                "bound argument (demoted ≤ undemoted ≤ block bounds) "
-                "needs nb ≤ 1, and nb ≤ 0 is exclusion, not demotion — "
-                "use exclude/fields_not for that")
-        return (str(neg), nb)
-
-    def _norm_fieldspec(fd) -> dict[str, list[str]] | None:
-        """fields / fields_not: {field: value | [values]} → {field:
-        [values]}; tokenization (pinned index mode) happens later with
-        the other token normalization."""
-        if fd is None:
-            return None
-        if not isinstance(fd, dict) or not fd:
-            raise ValueError(
-                "fields/fields_not must be a non-empty dict "
-                "{field: value | [values]}")
-        out: dict[str, list[str]] = {}
-        for f, v in fd.items():
-            vals = list(v) if isinstance(v, (list, tuple, set)) else [v]
-            if not vals:
-                raise ValueError(f"field {f!r} has an empty value list")
-            out[str(f)] = [str(x) for x in sorted(map(str, vals))]
-        return out
-
-    specs: list[tuple] = []
-    for q in queries:
-        if isinstance(q, str):
-            specs.append((q, mode, near_window, exclude, min_match,
-                          expand_prefixes, _norm_after(after),
-                          _norm_boosts(boosts), _norm_syn(synonyms),
-                          None, [], _norm_dismax(score_mode, tie_breaker),
-                          _norm_fieldspec(fields), _norm_fieldspec(fields_not),
-                          _norm_negative(negative, negative_boost)))
-        elif isinstance(q, dict):
-            q_mode = q.get("mode") or mode
-            req = q.get("required")
-            specs.append((
-                q.get("text", ""), q_mode,
-                int(q.get("near_window", near_window)),
-                q.get("exclude", exclude),
-                int(q.get("min_match", min_match)),
-                bool(q.get("prefix", expand_prefixes)),
-                _norm_after(q.get("after", after)),
-                _norm_boosts(q.get("boosts", boosts)),
-                _norm_syn(q.get("synonyms", synonyms)),
-                ([req] if isinstance(req, str) else list(req)) if req else None,
-                _norm_phrases(q.get("phrases")),
-                _norm_dismax(q.get("score_mode", score_mode),
-                             q.get("tie_breaker", tie_breaker)),
-                _norm_fieldspec(q.get("fields", fields)),
-                _norm_fieldspec(q.get("fields_not", fields_not)),
-                _norm_negative(q.get("negative", negative),
-                               q.get("negative_boost", negative_boost)),
-            ))
-        else:
-            parts = tuple(q)
-            q_mode = parts[1] if len(parts) > 1 and parts[1] else mode
-            q_nw = (int(parts[2]) if len(parts) > 2 and parts[2] is not None
-                    else near_window)
-            specs.append((parts[0], q_mode, q_nw, exclude, min_match,
-                          expand_prefixes, _norm_after(after),
-                          _norm_boosts(boosts), _norm_syn(synonyms),
-                          None, [], _norm_dismax(score_mode, tie_breaker),
-                          _norm_fieldspec(fields), _norm_fieldspec(fields_not),
-                          _norm_negative(negative, negative_boost)))
-    bad = sorted({s[1] for s in specs if s[1] not in _VALID})
-    if bad:
-        raise ValueError(f"unknown search mode(s) {bad}; valid: {_VALID}")
-    for _, m, _, _, mm, pf, _, _, sy, req, phs, _, _, _, _ in specs:
-        if mm and m != "any":
-            raise ValueError(
-                "min_match applies to mode='any' only (mode='all' IS "
-                "min_match=len(terms); positional modes imply it)")
-        if pf and m != "any":
-            raise ValueError(
-                "prefix/fuzzy expansion applies to mode='any' only")
-        if pf and mm:
-            raise ValueError(
-                "min_match over prefix/fuzzy expansions is ambiguous (one "
-                "stem can satisfy many clauses) — use one or the other")
-        if sy and (m != "any" or mm or pf):
-            raise ValueError(
-                "synonyms apply to plain mode='any' queries only (their "
-                "count/position semantics over expanded groups are "
-                "ambiguous in min_match/prefix/positional modes)")
-        if (req or phs) and m != "any":
-            raise ValueError(
-                "required terms / phrase clauses are boolean-query parts "
-                "(mode='any' base); the whole-query positional/conjunctive "
-                "modes cannot host them")
-        if (req or phs) and sy:
-            raise ValueError(
-                "synonyms cannot compose with required/phrase clauses "
-                "(expansion semantics over must clauses are ambiguous)")
-    any_positional = any(
-        s[1] in POSITIONAL_MODES or s[10] for s in specs)
-    if any_positional and not bool(meta.get("store_positions", False)):
-        raise ValueError(
-            "phrase/near search requires an index built with "
-            "IndexConfig.store_positions=True"
-        )
-
-    # tokenize with the INDEX's pinned mode (recorded at build time) —
-    # a unicode-built index must see unicode query terms and vice versa.
-    # positional queries keep RAW ordered token lists (order and, for
-    # phrase, duplicates define the match); others sorted distinct
-    uni = bool(meta.get("unicode", False))
+    specs = _normalize(queries, {
+        "mode": mode, "near_window": near_window, "exclude": exclude,
+        "min_match": min_match, "prefix": expand_prefixes, "after": after,
+        "boosts": boosts, "synonyms": synonyms, "score_mode": score_mode,
+        "tie_breaker": tie_breaker, "fields": fields,
+        "fields_not": fields_not, "negative": negative,
+        "negative_boost": negative_boost,
+    }, meta)
     cache = idf_cache if idf_cache is not None else {}
-    idx_fields = set(meta.get("field_cols") or [])
-
-    def _field_terms(fd: dict[str, list[str]], what: str) -> dict[str, list[str]]:
-        """{field: [values]} → {field: ['field:tok', ...]} with the
-        pinned tokenizer; validates against the index's field schema."""
-        unknown = sorted(set(fd) - idx_fields)
-        if unknown:
-            raise ValueError(
-                f"{what} names field(s) {unknown} the index was not "
-                f"built with (IndexConfig.field_cols={sorted(idx_fields)})")
-        out: dict[str, list[str]] = {}
-        for f, vals in fd.items():
-            terms_f = []
-            for v in vals:
-                ts = tokenize_py(v, unicode=uni)
-                if len(ts) != 1:
-                    raise ValueError(
-                        f"{what} value {v!r} for field {f!r} must "
-                        "tokenize to exactly one token (multi-token "
-                        "field matching would need phrase semantics)")
-                terms_f.append(f"{f}:{ts[0]}")
-            out[f] = sorted(set(terms_f))
-        return out
-
-    q_specs: list[list] = []
-    for text, m, nw, ex, mm, pf, af, bo, sy, req, phs, dmx, fds, fnot, neg in specs:
-        ex_terms = sorted(set(tokenize_py(ex, unicode=uni))) if ex else []
-        f_groups = None
-        if fds:
-            # one OR-group per field, AND across fields; sorted field
-            # order pins the required-group order (determinism)
-            ft = _field_terms(fds, "fields")
-            f_groups = [ft[f] for f in sorted(ft)]
-        if fnot:
-            # negative filters ride the NOT-term machinery (doc ids only)
-            fnt = _field_terms(fnot, "fields_not")
-            ex_terms = sorted(set(ex_terms)
-                              | {t for ts in fnt.values() for t in ts})
-        demote_spec = None
-        if neg is not None:
-            neg_terms = sorted(set(tokenize_py(neg[0], unicode=uni)))
-            if neg_terms:  # all-absent negative text = identity, not error
-                demote_spec = (neg_terms, neg[1])
-        if m in POSITIONAL_MODES:
-            toks = tokenize_py(text, unicode=uni)
-        elif pf:
-            toks = ("*", *_parse_prefix_terms(text, uni))  # resolved below
-        else:
-            toks = sorted(set(tokenize_py(text, unicode=uni)))
-        # boolean-query clauses: must terms tokenize plainly (each word
-        # must reduce to index tokens — all become required); phrase
-        # clauses keep RAW ordered token lists like whole-query phrases
-        req_toks = (sorted({t for w in req
-                            for t in tokenize_py(w, unicode=uni)})
-                    if req else [])
-        chain_specs = []
-        for p_text, p_win, p_unord in phs:
-            c_toks = tokenize_py(p_text, unicode=uni)
-            if len(c_toks) < 2:
-                raise ValueError(
-                    f"phrase clause {p_text!r} must tokenize to at least "
-                    "two tokens (a single token is just a required term)")
-            chain_specs.append((c_toks, p_win, p_unord))
-        if sy:
-            # synonym keys/values tokenize with the SAME pinned index mode
-            norm_sy: dict[str, list[str]] = {}
-            for key, vals in sy.items():
-                ks = tokenize_py(key, unicode=uni)
-                if len(ks) != 1:
-                    raise ValueError(
-                        f"synonym key {key!r} must reduce to exactly one "
-                        "index token")
-                one = []
-                for v in vals:
-                    vs = tokenize_py(v, unicode=uni)
-                    if len(vs) != 1:
-                        raise ValueError(
-                            f"synonym {v!r} for {key!r} must reduce to "
-                            "exactly one index token (multi-token synonyms "
-                            "would need phrase semantics)")
-                    one.append(vs[0])
-                norm_sy[ks[0]] = one
-            toks = sorted(set(toks)
-                          | {s for t in toks for s in norm_sy.get(t, ())})
-        if bo:
-            # boost keys tokenize with the SAME pinned index mode
-            norm_bo: dict[str, float] = {}
-            for key, w in bo.items():
-                ts = tokenize_py(key, unicode=uni)
-                if len(ts) != 1:
-                    raise ValueError(
-                        f"boost key {key!r} must reduce to exactly one "
-                        "index token")
-                norm_bo[ts[0]] = w
-            bo = norm_bo
-        q_specs.append([toks, m, nw, ex_terms, mm, af, bo, req_toks,
-                        chain_specs, dmx, f_groups, demote_spec])
-    need_stems = sorted({s for qs in q_specs if isinstance(qs[0], tuple)
-                         for s in qs[0][2]})
-    need_fuzz = sorted({f for qs in q_specs if isinstance(qs[0], tuple)
-                        for f in qs[0][3]})
-    need_wild = sorted({p for qs in q_specs if isinstance(qs[0], tuple)
-                        for p in qs[0][4]})
-    need_re = sorted({p for qs in q_specs if isinstance(qs[0], tuple)
-                      for p in qs[0][5]})
-    if need_stems or need_fuzz or need_wild or need_re:
-        exp = (_expand_stems(store, version, need_stems, cache, cfg)
-               if need_stems else {})
-        fexp = (_expand_fuzzy(store, version, need_fuzz, cache, cfg)
-                if need_fuzz else {})
-        wexp = (_expand_wildcards(store, version, need_wild, cache, cfg)
-                if need_wild else {})
-        rexp = (_expand_regex(store, version, need_re, cache, cfg)
-                if need_re else {})
-        for qs in q_specs:
-            if isinstance(qs[0], tuple):
-                _, plains, stems, fuzz, wilds, regexes = qs[0]
-                qs[0] = sorted(set(plains)
-                               | {t for s in stems for t in exp[s]}
-                               | {t for f in fuzz for t in fexp[f]}
-                               | {t for p in wilds for t in wexp[p]}
-                               | {t for p in regexes for t in rexp[p]})
-    # boost keys must name actual query terms (post-expansion; corpus-
-    # absent query terms still count — the boost is then a no-op, but
-    # the user DID type that term). A stray key is a typo, not a no-op.
-    for qs in q_specs:
-        if qs[6]:
-            scope = (set(qs[0]) | set(qs[7])
-                     | {t for ct, _, _ in qs[8] for t in ct})
-            stray = sorted(set(qs[6]) - scope)
-            if stray:
-                raise ValueError(
-                    f"boost keys {stray} are not terms of their query "
-                    f"(terms: {sorted(scope)})")
-    q_specs = [tuple(qs) for qs in q_specs]
-    all_terms = sorted(
-        {t for ts, *_ in q_specs for t in ts}
-        | {t for qs in q_specs for t in qs[7]}
-        | {t for qs in q_specs for ct, _, _ in qs[8] for t in ct}
-    )
-    if not all_terms:
+    resolved = _resolve_terms(store, version, specs, cache, cfg, meta)
+    if resolved is None:
         return spark.createDataFrame([], RESULT_SCHEMA)
-
-    # idf lookup: small vocabularies resolve from the one-shot full
-    # dictionary cache (zero jobs after the first probe); big ones fall
-    # back to a pushdown isin filter on the term-sorted stats parquet —
-    # query-sized result, tiny collect. Prefix expansions pre-seeded the
-    # cache, so they cost no extra job.
-    missing = [t for t in all_terms if t not in cache]
-    if missing:
-        _idf_lookup(store, version, cache, cfg, missing)
-    idf_map = {t: cache[t] for t in all_terms if cache[t] is not None}
-    if not idf_map:
-        # no scoring term is live: a fielded filter alone never
-        # surfaces a doc (filter clauses score 0 by definition)
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    # fielded-filter terms enter the scan and the shard postings with a
-    # PINNED idf of 0.0 — never their stats-table idf (they must not
-    # score) and never through the shared cache (which holds real idfs)
-    for qs in q_specs:
-        if qs[10]:
-            for grp in qs[10]:
-                for t in grp:
-                    idf_map[t] = 0.0
-    live_terms = sorted(idf_map)
-
-    # store_dl=True (default): the scan reads strictly query-term rows
-    # (positive terms plus any per-query NOT terms — exclusion postings
-    # ride the same pushed-down IN filter; only their doc ids decode).
-    # store_dl=False layout: postings carry no dl, so the reserved norms
-    # row rides in the same pushed-down scan (one extra row per shard).
-    excl_scan = sorted(
-        ({t for qs in q_specs for t in qs[3]}
-         | {t for qs in q_specs if qs[11] is not None for t in qs[11][0]})
-        - set(live_terms))
-    scan_terms = live_terms + excl_scan
-    if not bool(meta.get("store_dl", True)):
-        scan_terms = scan_terms + [NORMS_TERM]
-    seg_cols = ["shard_id", "term", "doc_blocks", "tf_blocks", "dl_blocks",
-                "block_last", "block_tf_max", "block_dl_min"]
-    if any_positional:  # positions read ONLY when some query needs them
-        seg_cols.append("pos_blocks")
-    segs = (
-        store.read("segments", version)
-        .filter(F.col("term").isin(scan_terms))
-        .select(*seg_cols)
-    )
-
-    # tombstoned ids (delete support; hora's has_deletion check,
-    # hnsw_idx.rs:235-237): filtering happens INSIDE the shard UDF, before
-    # top-k selection, so survivors' scores and ranks are exact. Two
-    # physical forms, identical results:
-    # - small sets (≤ cfg.max_broadcast_deletes, per meta's n_deletes
-    #   upper bound): collect to a sorted array and broadcast;
-    # - large sets (bulk purges): NEVER collected — doc-range sharding
-    #   means doc_id // shard_size IS the shard key, so each shard's
-    #   tombstones cogroup with its segment rows and no driver state
-    #   grows with the delete volume.
-    n_del = int(meta.get("n_deletes", 0))
-    allow_pre = None
-    if allowed_ids is not None:
-        if filter_df is not None:
-            raise ValueError("pass filter_df or allowed_ids, not both")
-        allow_pre = np.unique(np.asarray(list(allowed_ids), dtype=np.int64))
-        if len(allow_pre) > cfg.max_broadcast_deletes:
-            raise ValueError(
-                f"allowed_ids holds {len(allow_pre)} ids (> "
-                f"max_broadcast_deletes={cfg.max_broadcast_deletes}); "
-                "pass a filter_df instead — the driver-resident fast "
-                "path exists for config-bounded windows only")
-    has_filter = filter_df is not None or allow_pre is not None
-    allow_rows = None
-    if filter_df is not None:
-        filter_df = filter_df.select(
-            F.col(filter_df.columns[0]).cast("long").alias("doc_id"))
-        # ONE size-probe job: collect up to ceiling+1 ids. Small filters
-        # get their broadcast array from this same collect (no separate
-        # count job); an over-ceiling probe aborts early via the limit.
-        allow_rows = filter_df.limit(cfg.max_broadcast_deletes + 1).collect()
-    big = ((n_del > cfg.max_broadcast_deletes and store.exists("deletes", version))
-           or (allow_rows is not None
-               and len(allow_rows) > cfg.max_broadcast_deletes))
-    if big:
-        # either auxiliary set is too large to broadcast → ship BOTH as
-        # one tagged table cogrouped by shard. Exact integer DIV,
-        # bit-identical to the build's numpy `ids // shard_size` — a
-        # double-precision `/` would round the quotient near 2^53 and
-        # silently map a row to the wrong shard (this path exists
-        # precisely for the huge-corpus case).
-        shard_size = int(meta["shard_size"])
-        shard_col = F.expr(
-            f"CAST(CAST(doc_id AS BIGINT) DIV {shard_size} AS INT)"
-        ).alias("shard_id")
-        aux = None
-        if store.exists("deletes", version):
-            aux = store.read("deletes", version).select(
-                F.col("doc_id").cast("long").alias("doc_id"),
-                F.lit(1).alias("is_del"))
-        if has_filter:
-            if filter_df is None:  # driver-resident keep-list, tiny
-                filter_df = spark.createDataFrame(
-                    [(int(i),) for i in allow_pre], "doc_id long")
-            fa = filter_df.select("doc_id", F.lit(0).alias("is_del"))
-            aux = fa if aux is None else aux.unionByName(fa)
-        aux = aux.select("doc_id", "is_del", shard_col)
-        b_queries = spark.sparkContext.broadcast(q_specs)
-        b_idf = spark.sparkContext.broadcast(idf_map)
-
-        def run_cg(seg_pdf: pd.DataFrame, aux_pdf: pd.DataFrame) -> pd.DataFrame:
-            dels = None
-            # a shard with NO filter rows under an active filter allows
-            # nothing (empty array ≠ None = no filter)
-            alw = np.empty(0, np.int64) if has_filter else None
-            if len(aux_pdf):
-                tag = aux_pdf["is_del"].to_numpy()
-                ids_np = aux_pdf["doc_id"].to_numpy(np.int64)
-                d = ids_np[tag == 1]
-                if len(d):
-                    dels = np.unique(d)
-                if has_filter:
-                    alw = np.unique(ids_np[tag == 0])
-            return _shard_search(seg_pdf, b_queries.value, b_idf.value, k,
-                                 avgdl, k1, b, prune, deleted=dels,
-                                 allowed=alw)
-
-        local = (
-            segs.groupby("shard_id").cogroup(aux.groupby("shard_id"))
-            .applyInPandas(run_cg, RESULT_SCHEMA)
-        )
-    single_scan = False
-    if not big:
-        del_arr = store.deleted_ids(version)
-        allow_arr = None
-        if allow_pre is not None:
-            allow_arr = allow_pre
-        elif has_filter:
-            allow_arr = np.unique(np.array(
-                [r["doc_id"] for r in allow_rows], np.int64))
-
-        # SMALL-INDEX FAST PATH: when the whole segments table is at most
-        # cfg.max_single_task_scan_bytes on disk, coalesce the scan to
-        # one task and do the shard grouping inside it — scan, WAND, and
-        # the top-k merge become a single Exchange-free stage (the two
-        # shuffles of the distributed plan are pure overhead at this
-        # size). The byte check is one cached getContentSummary per
-        # immutable data dir; the shard-count pre-gate keeps that call
-        # cheap on a NameNode even for pathological layouts. Real
-        # corpora exceed the ceiling and keep the distributed plan.
-        n_sh = int(meta.get("n_shards") or 0)
-        if cfg.max_single_task_scan_bytes > 0 and 0 < n_sh <= 1024:
-            try:
-                tb = store.table_bytes("segments", version)
-            except Exception:
-                tb = None
-            single_scan = (tb is not None
-                           and tb <= cfg.max_single_task_scan_bytes)
-
-        if single_scan:
-            # ONE task: the query state (specs/idf/deletes/keep-list) is
-            # query-sized and rides the task closure — four explicit
-            # broadcast variables would only add py4j round trips here
-            # (the distributed plans below keep their broadcasts). The
-            # global per-query top-k and the final (query_id, score DESC,
-            # doc_id ASC) order come from one local pandas sort, so the
-            # Window/row_number + orderBy plan nodes disappear too.
-            def run_one(batches):
-                parts = [p for p in batches if len(p)]
-                if not parts:
-                    return
-                pdf = pd.concat(parts, ignore_index=True)
-                outs = []
-                for _, g in pdf.groupby("shard_id", sort=False):
-                    out = _shard_search(
-                        g, q_specs, idf_map, k, avgdl, k1, b,
-                        prune, deleted=del_arr, allowed=allow_arr)
-                    if len(out):
-                        outs.append(out)
-                if not outs:
-                    return
-                if k is None:  # enumeration: unordered by contract
-                    yield from outs
-                    return
-                allr = pd.concat(outs, ignore_index=True)
-                allr.sort_values(
-                    ["query_id", "score", "doc_id"],
-                    ascending=[True, False, True], kind="mergesort",
-                    ignore_index=True, inplace=True)
-                yield allr.groupby("query_id", sort=False).head(k)
-
-            # already capped at k per query, ranked, and globally ordered
-            return segs.coalesce(1).mapInPandas(run_one, RESULT_SCHEMA)
-
-        b_queries = spark.sparkContext.broadcast(q_specs)
-        b_idf = spark.sparkContext.broadcast(idf_map)
-        b_del = spark.sparkContext.broadcast(del_arr)
-        b_allow = spark.sparkContext.broadcast(allow_arr)
-
-        def run(seg_pdf: pd.DataFrame) -> pd.DataFrame:
-            return _shard_search(seg_pdf, b_queries.value, b_idf.value, k,
-                                 avgdl, k1, b, prune, deleted=b_del.value,
-                                 allowed=b_allow.value)
-
-        local = segs.groupBy("shard_id").applyInPandas(run, RESULT_SCHEMA)
-    if k is None:
-        # match ENUMERATION: every qualifying doc with its exact score,
-        # no global rank, no sort — shards are disjoint doc ranges, so
-        # the union needs no dedup and downstream aggregation (facets,
-        # counting, exports) keeps its partial/final shape
-        return local
-    # global top-k: per-shard output is ≤ k rows per query, so the merge
-    # input is bounded by n_shards·|queries|·k rows — driver-computable
-    # from the snapshot meta. When that bound is small the whole merge
-    # runs in ONE single-partition task (one exchange; the per-query rank
-    # and the global (query_id, score DESC, doc_id ASC) order come from a
-    # single local sort, and the separate range-partitioned orderBy —
-    # with its sampling pass — disappears). Large fan-ins (huge shard
-    # counts × batch sizes) keep the two-exchange window plan, whose
-    # per-partition state never exceeds one query's candidate set.
-    n_shards_meta = int(meta.get("n_shards") or 0)
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    if n_shards_meta and n_shards_meta * len(q_specs) * k <= 2_000_000:
-        ranked = local.repartition(1)
-    else:
-        ranked = local
-    return (
-        ranked.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-        .orderBy("query_id", F.desc("score"), F.asc("doc_id"))
-    )
+    specs, idf_map = resolved
+    plan = _choose_plan(spark, store, version, meta, cfg, filter_df,
+                        allowed_ids)
+    local = _run(spark, store, version, meta, cfg, plan, specs, idf_map, k,
+                 prune)
+    return _merge(local, plan, k, meta, len(specs))
 
 
 def search_matches(
@@ -1513,76 +1562,6 @@ def facet_counts(
         .groupBy("query_id", "facet")
         .agg(*aggs)
     )
-
-
-def _expand_regex(
-    store: SnapshotStore,
-    version: int | None,
-    pats: list[str],
-    cache: dict,
-    cfg: EngineConfig,
-) -> dict[str, list[str]]:
-    """Expand whole-term regex patterns ('/pat/' — Lucene RegexpQuery:
-    the pattern must match the ENTIRE term) against the index
-    DICTIONARY: ONE stats-table scan with OR'd anchored rlike
-    predicates serves every pattern in the batch. Like leading
-    wildcards, a regex cannot push a prefix down, so the scan reads the
-    (dictionary-sized, term-sorted) stats table; the corpus is never
-    touched. Same max_prefix_expansion cap and per-snapshot idf-cache
-    seeding as the other expansions (keyed '/pattern'); field terms
-    are excluded (':' can only come from field postings)."""
-    from functools import reduce
-    from operator import or_
-
-    cap = cfg.max_prefix_expansion
-    missing = [p for p in pats if ("/" + p) not in cache]
-    if missing:
-        total_cap = cap * len(missing)
-        vocab = _cached_vocab(cache)
-        if vocab is not None:
-            # full dictionary on the driver: the Python re attribution
-            # below is the authority either way, so matching it directly
-            # (zero Spark jobs) also closes the JVM-vs-Python pre-filter
-            # asymmetry for non-portable patterns
-            import re as _re0
-
-            rxs = [_re0.compile(f"^(?:{p})$") for p in missing]
-            rows = [{"term": t, "idf": cache[t]} for t in vocab
-                    if ":" not in t and any(rx.match(t) for rx in rxs)
-                    ][:total_cap + 1]
-        else:
-            cond = reduce(or_, [
-                F.col("term").rlike(f"^(?:{p})$") for p in missing
-            ]) & ~F.col("term").contains(":")
-            rows = (
-                store.read("stats", version)
-                .filter(cond)
-                .select("term", "idf")
-                .limit(total_cap + 1)
-                .collect()
-            )
-        if len(rows) > total_cap:
-            raise ValueError(
-                f"regex expansion exceeds {total_cap} terms for "
-                f"{missing}; narrow the pattern or raise "
-                "EngineConfig.max_prefix_expansion"
-            )
-        import re as _re
-
-        for p in missing:
-            rx = _re.compile(f"^(?:{p})$")
-            # driver-side re-verify attributes shared scan rows to the
-            # right pattern (the scan OR'd all patterns together)
-            got = [(r["term"], float(r["idf"])) for r in rows
-                   if rx.match(r["term"])]
-            if len(got) > cap:
-                raise ValueError(
-                    f"regex '/{p}/' expands to {len(got)} terms "
-                    f"(> max_prefix_expansion={cap}); narrow it")
-            cache["/" + p] = [t for t, _ in got]
-            for t, i in got:
-                cache[t] = i
-    return {p: cache["/" + p] for p in pats}
 
 
 def significant_terms(

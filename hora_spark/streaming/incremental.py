@@ -139,7 +139,7 @@ def append_build(
     k1, b = cfg.bm25.k1, cfg.bm25.b
     updates: dict[str, list[str]] = {}
     if n_new > 0:
-        # _encode_shard emits the reserved norms row per shard inline, so
+        # encode_shard_rows emits the reserved norms row per shard inline, so
         # the delta commit is one table append. The layout mode follows the
         # EXISTING index (meta), not the caller's cfg — one index, one mode.
         block_size, store_dl = cfg.index.block_size, bool(meta.get("store_dl", True))

@@ -32,8 +32,7 @@ def setup(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("advidx"))
     eng = Engine(spark, path, CFG)
     eng.build(df, id_col=None, order_cols=["conv_id", "turn_idx"])
-    corpus = prepare(df, id_col=None, order_cols=["conv_id", "turn_idx"],
-                     use_pandas_udf=False)
+    corpus = prepare(df, id_col=None, order_cols=["conv_id", "turn_idx"])
     yield eng, corpus
     df.unpersist()
     shutil.rmtree(path, ignore_errors=True)
@@ -271,8 +270,7 @@ def test_advanced_options_store_dl_false(spark, tmp_path):
     path = str(tmp_path / "nodl")
     eng = Engine(spark, path, cfg)
     eng.build(df, id_col=None, order_cols=["conv_id", "turn_idx"])
-    corpus = prepare(df, id_col=None, order_cols=["conv_id", "turn_idx"],
-                     use_pandas_udf=False)
+    corpus = prepare(df, id_col=None, order_cols=["conv_id", "turn_idx"])
     assert rows(eng.search("water people", k=K, exclude="the")) == \
         rows(bruteforce_topk(spark, corpus, "water people", k=K, exclude="the"))
     assert rows(eng.search("water people time", k=K, min_match=2)) == \

@@ -124,7 +124,7 @@ def test_rebuild_after_delete_matches_bruteforce_on_live_docs(spark, tmp_path):
     # oracle: brute-force BM25 over the live docs with ORIGINAL ids
     with_ids = assign_doc_ids(df, ["conv_id", "turn_idx"])
     live = with_ids.filter(~F.col("doc_id").isin([int(v) for v in victims]))
-    c = prepare(live, id_col="doc_id", use_pandas_udf=False)
+    c = prepare(live, id_col="doc_id")
     want = [(r["doc_id"], r["score"]) for r in bruteforce_topk(spark, c, q, k=10).collect()]
     got = [(r["doc_id"], r["score"]) for r in eng.search(q, k=10).collect()]
     assert [d for d, _ in got] == [d for d, _ in want]

@@ -48,8 +48,7 @@ def engine(spark, transcripts, tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def corpus(spark, transcripts):
-    return prepare(transcripts, id_col=None, order_cols=["conv_id", "turn_idx"],
-                   use_pandas_udf=False)
+    return prepare(transcripts, id_col=None, order_cols=["conv_id", "turn_idx"])
 
 
 def test_datagen_deterministic(spark):

@@ -39,8 +39,7 @@ def _python_recount(df):
     different plan)."""
     from hora_spark.operators.corpus import prepare
 
-    corpus = prepare(df, id_col=None, order_cols=["conv_id", "turn_idx"],
-                     use_pandas_udf=False)
+    corpus = prepare(df, id_col=None, order_cols=["conv_id", "turn_idx"])
     tf = collections.defaultdict(dict)
     dl = {}
     for r in corpus.tf.collect():

@@ -30,8 +30,7 @@ def setup(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("fuzzidx"))
     eng = Engine(spark, path, CFG)
     eng.build(df, id_col=None, order_cols=["conv_id", "turn_idx"])
-    corpus = prepare(df, id_col=None, order_cols=["conv_id", "turn_idx"],
-                     use_pandas_udf=False)
+    corpus = prepare(df, id_col=None, order_cols=["conv_id", "turn_idx"])
     yield eng, corpus
     df.unpersist()
     shutil.rmtree(path, ignore_errors=True)

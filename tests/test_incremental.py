@@ -48,10 +48,9 @@ def appended_engine(spark, split_data, tmp_path_factory):
 def _frozen_oracle(spark, eng, base, extra, query, k):
     """Brute-force oracle under FROZEN build-time stats: idf/avgdl from the
     base corpus, scores over base+appended docs."""
-    c_base = prepare(base, id_col=None, order_cols=["conv_id", "turn_idx"],
-                     use_pandas_udf=False)
+    c_base = prepare(base, id_col=None, order_cols=["conv_id", "turn_idx"])
     c_all = prepare(base.unionByName(extra), id_col=None,
-                    order_cols=["conv_id", "turn_idx"], use_pandas_udf=False)
+                    order_cols=["conv_id", "turn_idx"])
     # doc_id order: base convs sort before "xconv..." so appended ids extend
     frozen = type(c_all)(
         docs=c_all.docs, tf=c_all.tf, term_stats=c_base.term_stats,

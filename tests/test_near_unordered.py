@@ -67,8 +67,7 @@ def rnd(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("uidx"))
     eng = Engine(spark, path, PCFG)
     eng.build(df, id_col=None, order_cols=["conv_id", "turn_idx"])
-    corpus = prepare(df, id_col=None, order_cols=["conv_id", "turn_idx"],
-                     use_pandas_udf=False)
+    corpus = prepare(df, id_col=None, order_cols=["conv_id", "turn_idx"])
     with_ids = assign_doc_ids(df, ["conv_id", "turn_idx"])
     yield eng, corpus, with_ids
     df.unpersist()

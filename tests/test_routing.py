@@ -17,8 +17,7 @@ QUERIES = ["water people", "the of and", "w00123"]
 def corpus_env(spark):
     df = generate_transcripts(spark, 50, seed=41).cache()
     df.count()
-    corpus = prepare(df, id_col=None, order_cols=["conv_id", "turn_idx"],
-                     use_pandas_udf=False)
+    corpus = prepare(df, id_col=None, order_cols=["conv_id", "turn_idx"])
     terms = sorted({t for q in QUERIES for t in q.split()})
     idf = {r["term"]: float(r["idf"]) for r in
            corpus.term_stats.filter(F.col("term").isin(terms)).collect()}

@@ -68,8 +68,7 @@ def test_adaptive_build_scales_shards_with_corpus(
     for r in norms.collect():
         assert r["n_docs"] <= 250, r
 
-    corpus = prepare(df, id_col=None, order_cols=["conv_id", "turn_idx"],
-                     use_pandas_udf=False)
+    corpus = prepare(df, id_col=None, order_cols=["conv_id", "turn_idx"])
     got = eng.search("water people time", k=10).collect()
     want = bruteforce_topk(spark, corpus, "water people time", k=10).collect()
     assert [r["doc_id"] for r in got] == [r["doc_id"] for r in want]

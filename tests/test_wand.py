@@ -101,7 +101,7 @@ def test_rare_term_decodes_only_its_posting(monkeypatch):
 
     import hora_spark.functions.wand as wand_mod
     from hora_spark.operators.segments import encode_shard_rows
-    from hora_spark.operators.query import _shard_search
+    from hora_spark.operators.query import QuerySpec, _shard_search
 
     n_docs = 20_000
     rows = {
@@ -121,7 +121,7 @@ def test_rare_term_decodes_only_its_posting(monkeypatch):
         return real(buf, base=base, delta=delta)
 
     monkeypatch.setattr(wand_mod, "decode_block", counting)
-    out = _shard_search(seg_pdf, [(["rare"], "any", 5, [], 0, None, None, [], [], None, None, None)],
+    out = _shard_search(seg_pdf, [QuerySpec(terms=("rare",))],
                         {"rare": 2.0}, k=10,
                         avgdl=10.0, k1=K1, b=B, prune=True)
     assert sorted(out["doc_id"]) == [0, 1000, 2000, 3000, 4000]

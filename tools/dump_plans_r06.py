@@ -58,7 +58,7 @@ def main() -> None:
 
     from hora_spark.operators.corpus import prepare
     from hora_spark.operators.oracle import bruteforce_topk
-    c = prepare(docs, id_col="doc_id", use_pandas_udf=False)
+    c = prepare(docs, id_col="doc_id")
     dump(bruteforce_topk(spark, c, "join hash row", k=10), "bm25_topk_hot")
 
     dump(dedup.exact_dedup(docs), "exact_dedup")

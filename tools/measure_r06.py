@@ -128,7 +128,7 @@ def main() -> None:
     from hora_spark.operators.oracle import bruteforce_topk
 
     t0 = time.perf_counter()
-    c = prepare(docs, id_col="doc_id", use_pandas_udf=False)
+    c = prepare(docs, id_col="doc_id")
     r = bruteforce_topk(spark, c, "join hash row", k=10).collect()
     out["bm25_topk_hot_first"] = round(time.perf_counter() - t0, 4)
     timed("bm25_topk_hot_warm",
