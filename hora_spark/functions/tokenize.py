@@ -1,15 +1,18 @@
 """Tokenizer — THE text → terms function, pinned once.
 
 Semantics: lowercase, split on runs of characters outside [a-z0-9], drop
-empties. Three implementations that must agree exactly (tested):
+empties. Four implementations that must agree exactly (tested):
 
 1. `tokens_col`       — JVM-side built-ins (split/lower), codegen'd, the
                         fastest path; used by relational-style operators.
-2. `tokenize_udf`     — Arrow-vectorized pandas UDF (the north_star mandates
-                        Arrow pandas UDFs for the tokenize stage of the
-                        index build; this is also where a heavier tokenizer —
-                        ICU, language-aware — would plug in at 100 TB scale).
-3. `TOKENIZE_SQL_*`   — DuckDB-compatible SQL fragments for the oracle.
+2. pandas `.str.findall(token_run_regex(mode))` — the Arrow-vectorized
+                        pass inside `segments.map_partial_segments` (the
+                        one indexing path: the build AND every append) and
+                        `corpus.tf_map_side`; this is also where a heavier
+                        tokenizer — ICU, language-aware — would plug in at
+                        100 TB scale.
+3. `tokenize_py`      — the scalar reference, ground truth for tests.
+4. `TOKENIZE_SQL_*`   — DuckDB-compatible SQL fragments for the oracle.
 
 The dimension check of the reference (every insert asserts vector width,
 /root/reference/src/core/ann_index.rs:82,92) becomes: tokenize is total on
@@ -21,10 +24,8 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from hora_spark.config import (
     TOKEN_PATTERN,
@@ -56,25 +57,6 @@ def tokens_col(text: Column, unicode: bool = False) -> Column:
     """
     split_re = TOKEN_SPLIT_RE_UNICODE if unicode else TOKEN_SPLIT_RE
     return F.array_remove(F.split(F.lower(F.coalesce(text, F.lit(""))), split_re), "")
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def tokenize_udf(texts: pd.Series) -> pd.Series:
-    """Arrow-vectorized tokenizer: one C-regex findall pass (matching runs
-    == splitting on non-runs, with empties never produced). Must agree
-    exactly with tokens_col."""
-    return texts.fillna("").str.lower().str.findall(TOKEN_PATTERN)
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def tokenize_udf_unicode(texts: pd.Series) -> pd.Series:
-    """Arrow-vectorized Unicode twin of tokenize_udf — must agree exactly
-    with tokens_col(..., unicode=True) on NFC text."""
-    return texts.fillna("").str.lower().str.findall(_TOKEN_RE_UNI)
-
-
-def get_tokenize_udf(unicode: bool = False):
-    return tokenize_udf_unicode if unicode else tokenize_udf
 
 
 def token_run_regex(unicode: bool = False):

@@ -53,7 +53,6 @@ from hora_spark.operators.corpus import assign_doc_ids
 from hora_spark.operators.segments import (
     NORMS_TERM,
     SEGMENT_SCHEMA,
-    encode_shard_rows,
     map_partial_segments,
     merge_shard_rows,
 )
@@ -104,6 +103,28 @@ def _shard_bytes(spark: SparkSession, d: str) -> dict[int, int]:
                 total += int(f.getLen())
         out[sid] = total
     return out
+
+
+def write_merged_segments(store: SnapshotStore, partials: DataFrame,
+                          n_parts: int, block_size: int,
+                          store_dl: bool) -> str:
+    """The reduce side of the build AND of an append: merge each shard's
+    partial segment rows (map_partial_segments) into canonical rows and
+    write them to a fresh staged segments dir, which is returned
+    uncommitted. The merge exchange is pinned to n_parts partitions — one
+    per shard the rows can touch (AQE bucketing lumps several shards into
+    one task and creates stragglers)."""
+    segs = (
+        partials.repartition(n_parts, "shard_id")
+        .groupBy("shard_id")
+        .applyInPandas(
+            lambda pdf: merge_shard_rows(pdf, block_size, store_dl=store_dl),
+            SEGMENT_SCHEMA,
+        )
+    )
+    d_seg = store.stage_dir("segments")
+    segs.write.mode("overwrite").partitionBy("shard_id").parquet(d_seg)
+    return d_seg
 
 
 def _commit_stats_and_lineage(
@@ -293,31 +314,33 @@ def build_index(
             max_id = n_raw - 1
         else:
             max_id = int(df.agg(F.max(id_col)).collect()[0][0])
+            # small-corpus scan starvation: a corpus that lives in one file /
+            # one parquet row group tokenizes in ONE task however many cores
+            # exist (split granularity is the row group). When the counted
+            # corpus is provably small — so one extra narrow shuffle of the
+            # raw text is trivially cheap AND the double-execution risk of
+            # df.rdd on exotic plans is bounded by the same row count — fan
+            # the input out to the core count before the tokenize pass. Big
+            # corpora never enter (they have enough splits, and their text
+            # must not be re-shuffled; guide §2.3). Only a caller-supplied
+            # id column can arrive starved: assign_doc_ids above already
+            # range-partitions to defaultParallelism, so that path skips
+            # the probe (one Spark job under AQE).
+            para = spark.sparkContext.defaultParallelism
+            if max_id + 1 <= 5_000_000 and para > 1:
+                try:
+                    in_parts = df.rdd.getNumPartitions()
+                except Exception:
+                    in_parts = para
+                if in_parts < para:
+                    df = df.repartition(para)
+                    _dbg(f"input fanned out {in_parts} → {para} partitions")
         # shard count from the COUNTED id span (adaptive by default —
         # bounds per-shard merge input by target_docs_per_shard; see
         # IndexConfig.n_shards_for), then shard_size = ceil(span/n_shards)
         n_shards = cfg.index.n_shards_for(max_id + 1)
         shard_size = max(1, (max_id + n_shards) // n_shards)
         _dbg("ids assigned")
-
-        # small-corpus scan starvation: a corpus that lives in one file /
-        # one parquet row group tokenizes in ONE task however many cores
-        # exist (split granularity is the row group). When the counted
-        # corpus is provably small — so one extra narrow shuffle of the
-        # raw text is trivially cheap AND the double-execution risk of
-        # df.rdd on exotic plans is bounded by the same row count — fan
-        # the input out to the core count before the tokenize pass. Big
-        # corpora never enter (they have enough splits, and their text
-        # must not be re-shuffled; guide §2.3).
-        para = spark.sparkContext.defaultParallelism
-        if max_id + 1 <= 5_000_000 and para > 1:
-            try:
-                in_parts = df.rdd.getNumPartitions()
-            except Exception:
-                in_parts = para
-            if in_parts < para:
-                df = df.repartition(para)
-                _dbg(f"input fanned out {in_parts} → {para} partitions")
 
         # ---- ONE tokenize pass → map-side PARTIAL segment rows ------------
         # (postings pre-packed per (shard, term) per batch: the shuffle and
@@ -350,19 +373,8 @@ def build_index(
         part = partials
         if len(wave_shards) < n_shards:
             part = part.filter(F.col("shard_id").isin(wave_shards))
-        # pin the merge exchange to one partition per shard (AQE bucketing
-        # lumps several shards into one task and creates stragglers)
-        store_dl = cfg.index.store_dl
-        segs = (
-            part.repartition(len(wave_shards), "shard_id")
-            .groupBy("shard_id")
-            .applyInPandas(
-                lambda pdf: merge_shard_rows(pdf, block_size, store_dl=store_dl),
-                SEGMENT_SCHEMA,
-            )
-        )
-        d_seg = store.stage_dir("segments")
-        segs.write.mode("overwrite").partitionBy("shard_id").parquet(d_seg)
+        d_seg = write_merged_segments(store, part, len(wave_shards),
+                                      block_size, cfg.index.store_dl)
         wall_by_dir[d_seg] = time.perf_counter() - t0
         _dbg(f"wave {waves_done} encoded+written")
         seg_dirs.append(d_seg)

@@ -164,20 +164,22 @@ def prepare(
     if id_col is None:
         df = assign_doc_ids(df, order_cols or ["conv_id", "turn_idx"])
         id_col = "doc_id"
-
-    # prepare() is the oracle/test-scale path (the production build never
-    # materializes tf), so when the input sits in one file/row group —
-    # tokenize parallelism 1 however many cores exist — fanning it out
-    # with one cheap narrow shuffle is always the right trade here
-    spark = df.sparkSession
-    para = spark.sparkContext.defaultParallelism
-    if para > 1:
-        try:
-            in_parts = df.rdd.getNumPartitions()
-        except Exception:
-            in_parts = para
-        if in_parts < para:
-            df = df.repartition(para)
+    else:
+        # prepare() is the oracle/test-scale path (the production build
+        # never materializes tf), so when the input sits in one file/row
+        # group — tokenize parallelism 1 however many cores exist —
+        # fanning it out with one cheap narrow shuffle is always the right
+        # trade here. Only a caller-supplied id column can arrive starved:
+        # assign_doc_ids already range-partitions to defaultParallelism,
+        # so that path skips the probe (one Spark job under AQE).
+        para = df.sparkSession.sparkContext.defaultParallelism
+        if para > 1:
+            try:
+                in_parts = df.rdd.getNumPartitions()
+            except Exception:
+                in_parts = para
+            if in_parts < para:
+                df = df.repartition(para)
 
     tf = tf_map_side(df, text_col, id_col, unicode=unicode).withColumnRenamed(id_col, "doc_id")
     tf = tf.persist(StorageLevel.MEMORY_AND_DISK)

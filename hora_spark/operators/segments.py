@@ -5,16 +5,18 @@ A segment row is one (shard, term) posting list in compressed block form
 (SEGMENT_SCHEMA), plus one reserved NORMS_TERM row per shard carrying the
 doc-length sidecar. Three producers emit rows of this shape:
 
-- `map_partial_segments`: the MAP-SIDE of the build — inside the Arrow
-  tokenize pass, each input batch packs its postings per (shard, term)
-  into single-block partial rows. This is what crosses the build's one
-  shuffle: ~|vocab|·|partitions| blob rows instead of |postings| string
-  rows (measured 25× fewer boundary crossings; the Python-object cost of
-  55M-row Arrow conversions dominated the whole build before this).
+- `map_partial_segments`: the MAP-SIDE of the build and of every append
+  (one indexing path) — inside the Arrow tokenize pass, each input batch
+  packs its postings per (shard, term) into single-block partial rows.
+  This is what crosses the build's one shuffle: ~|vocab|·|partitions|
+  blob rows instead of |postings| string rows (measured 25× fewer
+  boundary crossings; the Python-object cost of 55M-row Arrow
+  conversions dominated the whole build before this).
   The reference analog is the per-thread partial work rayon merges
   (/root/reference/src/core/knn.rs:250-256) — here merge is associative
   so partials compose exactly.
-- `merge_shard_rows`: the REDUCE side and the compaction path — decode
+- `merge_shard_rows`: the REDUCE side (of the build and of an append,
+  via build_index.write_merged_segments) and the compaction path — decode
   any set of partial/full rows of one shard, rebuild canonical rows via
   `encode_shard_rows`. Output depends only on the logical (doc, term, tf,
   dl) set, never on partitioning (the determinism invariant).
@@ -427,7 +429,14 @@ def map_partial_segments(
     (fields={'lang': 'en'}), never as scoring terms (':' is unreachable
     by the tokenizer). Field postings reuse the doc's TEXT dl as their
     norm entry and add NO norms rows, so N/avgdl/df-of-text-terms are
-    byte-identical with and without fields."""
+    byte-identical with and without fields. With store_positions, field
+    term positions index into the doc's CONCATENATED field-token list;
+    queries never read them (field terms can't enter positional chains)
+    but they keep the encode path uniform.
+
+    This is also the map side of `append_build`: an append runs this pass
+    on its new rows (ids already offset past next_doc_id) with the
+    index's pinned modes, so the delta rows equal a full build's."""
     token_re = token_run_regex(unicode)
     field_cols = list(field_cols or [])
 

@@ -218,3 +218,83 @@ def test_auto_compaction_bounds_posting_sources(spark, split_data, tmp_path):
             (r["doc_id"], r["score"]) for r in b], q
     for name in engines:
         shutil.rmtree(str(tmp_path / name), ignore_errors=True)
+
+
+def test_appends_leave_no_persisted_dataframe(spark, tmp_path):
+    """append_build stages its doc ids as parquet like the build does, so
+    no appended batch leaves a persisted DataFrame behind (regression:
+    each append used to pin one MEMORY_AND_DISK copy of its batch that
+    nothing unpersisted)."""
+    schema = "conv_id string, turn_idx int, role string, text string, tool string"
+    base = spark.createDataFrame([("c0", 0, "u", "alpha beta", None)], schema)
+    eng = Engine(spark, str(tmp_path / "np"), CFG)
+    eng.build(base, id_col=None, order_cols=["conv_id", "turn_idx"])
+    jsc = spark.sparkContext._jsc
+    n0 = jsc.getPersistentRDDs().size()
+    for i in range(3):
+        batch = spark.createDataFrame(
+            [(f"x{i}", 0, "u", f"alpha gamma{i}", None)], schema)
+        append_build(spark, eng.store, batch, cfg=CFG, batch_id=f"d{i}")
+    assert jsc.getPersistentRDDs().size() == n0
+    assert int(eng.store.meta()["n_docs"]) == 4
+
+
+_VOCAB = ["alpha", "beta", "gamma", "delta", "water", "people", "time",
+          "数据", "处理", "привет", "café", "x1", "42"]
+
+
+def _rows(prefix: str, n_convs: int, seed: int) -> list[tuple]:
+    """n_convs conversations of 4 turns; every 7th turn is token-less so
+    appended and built batches both consume ids of dropped rows."""
+    rng = np.random.default_rng(seed)
+    out = []
+    for c in range(n_convs):
+        for t in range(4):
+            i = c * 4 + t
+            text = ("..." if i % 7 == 3 else
+                    " ".join(rng.choice(_VOCAB, size=int(rng.integers(1, 12)))))
+            role = None if i % 11 == 5 else ("user" if t % 2 == 0 else "assistant")
+            out.append((f"{prefix}{c:02d}", t, role, text, None))
+    return out
+
+
+@pytest.mark.parametrize("index_kw", [
+    {},
+    {"store_positions": True, "field_cols": ("role",)},
+    {"unicode": True, "field_cols": ("role",)},
+], ids=["default", "positions_fields", "unicode_fields"])
+def test_append_writes_the_rows_a_full_build_writes(spark, tmp_path, index_kw):
+    """One indexing path: 64 base rows + an append of 32 rows whose
+    conv_ids sort after the base's give the same shard_size (8) and doc
+    ids as one build over all 96 rows, so the append's delta dir must
+    equal the full build's shards 8-11 in every column but encode_us."""
+    schema = "conv_id string, turn_idx int, role string, text string, tool string"
+    cfg = EngineConfig(index=IndexConfig(min_shards=1, target_docs_per_shard=8,
+                                         block_size=4, **index_kw))
+    base_rows, new_rows = _rows("c", 16, seed=3), _rows("x", 8, seed=4)
+    order = ["conv_id", "turn_idx"]
+
+    inc = Engine(spark, str(tmp_path / "inc"), cfg)
+    inc.build(spark.createDataFrame(base_rows, schema), id_col=None, order_cols=order)
+    append_build(spark, inc.store, spark.createDataFrame(new_rows, schema),
+                 order_cols=order, cfg=cfg, batch_id="d0")
+    full = Engine(spark, str(tmp_path / "full"), cfg)
+    full.build(spark.createDataFrame(base_rows + new_rows, schema),
+               id_col=None, order_cols=order)
+    assert int(inc.store.meta()["shard_size"]) == int(full.store.meta()["shard_size"]) == 8
+
+    def rows(df):
+        # every column but encode_us (encode wall time), sorted by
+        # (shard_id, term)
+        cols = ["shard_id", "term", "df_local", "doc_blocks", "tf_blocks",
+                "dl_blocks", "pos_blocks", "block_last", "block_n",
+                "block_tf_max", "block_dl_min"]
+        return sorted(tuple(r) for r in df.select(*cols).collect())
+
+    delta = rows(spark.read.parquet(inc.store.tables()["segments"][-1]))
+    want = rows(full.store.read("segments").filter(F.col("shard_id").between(8, 11)))
+    assert {r[0] for r in want} == {8, 9, 10, 11}
+    assert delta == want
+    assert int(inc.store.meta()["next_doc_id"]) == int(full.store.meta()["next_doc_id"]) == 96
+    assert int(inc.store.meta()["n_docs"]) == int(full.store.meta()["n_docs"])
+    shutil.rmtree(str(tmp_path), ignore_errors=True)

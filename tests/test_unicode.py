@@ -10,15 +10,16 @@ NFC-normalizes decomposed sequences while Python/Java lower() do not
 """
 
 import duckdb
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from hora_spark.config import EngineConfig, IndexConfig
 from hora_spark.engine import Engine
 from hora_spark.functions.tokenize import (
+    token_run_regex,
     tokenize_py,
     tokenize_sql_array,
-    tokenize_udf_unicode,
     tokens_col,
 )
 from hora_spark.operators.corpus import prepare
@@ -41,28 +42,31 @@ PARITY_TEXTS = [
 ]
 
 
-def test_four_way_tokenizer_parity(spark):
-    """tokenize_py ≡ tokens_col (Java regex) ≡ tokenize_udf_unicode
-    (pandas) ≡ DuckDB (RE2) on the NFC fixture — the same three-way pin
-    the ASCII mode has, extended to the oracle engine."""
-    py = [tokenize_py(t, unicode=True) for t in PARITY_TEXTS]
+@pytest.mark.parametrize("unicode", [False, True], ids=["ascii", "unicode"])
+def test_four_way_tokenizer_parity(spark, unicode):
+    """tokenize_py ≡ tokens_col (Java regex) ≡ the pandas
+    `.str.findall(token_run_regex(mode))` pass that map_partial_segments
+    runs for the build AND every append ≡ DuckDB (RE2) on the NFC fixture,
+    in both tokenizer modes."""
+    py = [tokenize_py(t, unicode=unicode) for t in PARITY_TEXTS]
 
     df = spark.createDataFrame([(i, t) for i, t in enumerate(PARITY_TEXTS)],
                                "i int, text string")
     jvm = {r["i"]: r["t"] for r in df.select(
-        "i", tokens_col(F.col("text"), unicode=True).alias("t")).collect()}
-    pdu = {r["i"]: r["t"] for r in df.select(
-        "i", tokenize_udf_unicode(F.col("text")).alias("t")).collect()}
+        "i", tokens_col(F.col("text"), unicode=unicode).alias("t")).collect()}
+    # the exact expression of the build's map side (segments.py run())
+    pdu = pd.Series(PARITY_TEXTS, dtype=object).fillna("").str.lower() \
+        .str.findall(token_run_regex(unicode)).tolist()
 
     con = duckdb.connect()
     duck = {}
     for i, t in enumerate(PARITY_TEXTS):
-        sql = "SELECT " + tokenize_sql_array("?", unicode=True)
+        sql = "SELECT " + tokenize_sql_array("?", unicode=unicode)
         duck[i] = con.execute(sql, [t]).fetchone()[0]
 
     for i in range(len(PARITY_TEXTS)):
         assert jvm[i] == py[i], f"JVM vs py at {i}"
-        assert pdu[i] == py[i], f"pandas UDF vs py at {i}"
+        assert pdu[i] == py[i], f"build's pandas pass vs py at {i}"
         assert duck[i] == py[i], f"DuckDB vs py at {i}"
 
 
