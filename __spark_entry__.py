@@ -656,8 +656,8 @@ ORDER BY s DESC, doc_id ASC LIMIT {k}
 
 
 # one batch, seventeen predicate shapes, ONE Spark job (round-5: per-query
-# mode rides through the shard UDF; tools/mixed_mode_ab.py measures
-# ~3.3× over mode-segregated jobs at batch-10). The last five are dict
+# mode rides through the shard UDF; measured ~3.3× over mode-segregated
+# jobs at batch-10, PLANS.md r5). The last five are dict
 # specs exercising the advanced predicates: NOT terms (must_not),
 # minimum_should_match, dictionary prefix expansion, fuzzy
 # (edit-distance) expansion, and per-term boosts.

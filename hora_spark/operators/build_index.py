@@ -41,7 +41,6 @@ seg_ids — the partial, idempotent upgrade of hora's monolithic dump/load
 
 from __future__ import annotations
 
-import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -272,16 +271,7 @@ def build_index(
     fail_after_wave: test hook — raise after committing that many waves,
     simulating a mid-build crash (resume fixture, FIXTURES.md §5).
     """
-
-
     cfg = cfg or EngineConfig()
-    dbg = os.environ.get("HORA_BUILD_DEBUG") == "1"
-    t_start = time.perf_counter()
-
-    def _dbg(label: str) -> None:
-        if dbg:
-            print(f"[build] {label}: {time.perf_counter() - t_start:.1f}s", flush=True)
-
     done_segs: set[int] = set()
     if resume and store.exists("lineage"):
         done_segs = {
@@ -290,106 +280,114 @@ def build_index(
             if int(r["seg_id"]) >= 0  # negative ids are append-batch stubs
         }
 
-    if resume and store.exists("partials"):
-        meta = store.meta()
-        shard_size = int(meta["shard_size"])
-        max_id = int(meta["max_doc_id"])
-        # the resumed build must use the SAME shard count the original
-        # derived; for metas that predate the n_shards key, the staged
-        # layout itself is the ground truth — re-deriving from cfg could
-        # disagree with the staged shard_size (different cfg, or a span
-        # above min_shards*target) and mislabel the committed layout
-        n_shards = int(meta.get("n_shards")
-                       or -(-(max_id + 1) // shard_size))
-        partials = store.read("partials")
-        staged = True
-    else:
-        # ---- ids + shard size (no tokenize needed) ------------------------
-        if id_col is None:
-            df, n_raw = assign_doc_ids(
-                df, order_cols or ["conv_id", "turn_idx"], with_count=True,
-                staging_dir=store.stage_dir("ingest"),
-            )
-            id_col = "doc_id"
-            max_id = n_raw - 1
-        else:
-            max_id = int(df.agg(F.max(id_col)).collect()[0][0])
-            # small-corpus scan starvation: a corpus that lives in one file /
-            # one parquet row group tokenizes in ONE task however many cores
-            # exist (split granularity is the row group). When the counted
-            # corpus is provably small — so one extra narrow shuffle of the
-            # raw text is trivially cheap AND the double-execution risk of
-            # df.rdd on exotic plans is bounded by the same row count — fan
-            # the input out to the core count before the tokenize pass. Big
-            # corpora never enter (they have enough splits, and their text
-            # must not be re-shuffled; guide §2.3). Only a caller-supplied
-            # id column can arrive starved: assign_doc_ids above already
-            # range-partitions to defaultParallelism, so that path skips
-            # the probe (one Spark job under AQE).
-            para = spark.sparkContext.defaultParallelism
-            if max_id + 1 <= 5_000_000 and para > 1:
-                try:
-                    in_parts = df.rdd.getNumPartitions()
-                except Exception:
-                    in_parts = para
-                if in_parts < para:
-                    df = df.repartition(para)
-                    _dbg(f"input fanned out {in_parts} → {para} partitions")
-        # shard count from the COUNTED id span (adaptive by default —
-        # bounds per-shard merge input by target_docs_per_shard; see
-        # IndexConfig.n_shards_for), then shard_size = ceil(span/n_shards)
-        n_shards = cfg.index.n_shards_for(max_id + 1)
-        shard_size = max(1, (max_id + n_shards) // n_shards)
-        _dbg("ids assigned")
-
-        # ---- ONE tokenize pass → map-side PARTIAL segment rows ------------
-        # (postings pre-packed per (shard, term) per batch: the shuffle and
-        # every Arrow boundary carries ~|vocab|·|batches| blob rows instead
-        # of |postings| string rows)
-        partials = map_partial_segments(
-            df, text_col, id_col, shard_size,
-            unicode=cfg.index.unicode,
-            store_positions=cfg.index.store_positions,
-            field_cols=list(cfg.index.field_cols),
-        )
-        staged = waves > 1
-        if staged:
-            d_tf = store.write_table("partials", partials, partition_by=["shard_id"])
-            store.commit({"partials": [d_tf]},
-                         meta={"shard_size": shard_size, "max_doc_id": max_id,
-                               "n_shards": n_shards})
+    # the staged id table is read only by the partials/segment writes
+    # below; it is discarded once they are written, or when one raises
+    d_ids = None
+    try:
+        if resume and store.exists("partials"):
+            meta = store.meta()
+            shard_size = int(meta["shard_size"])
+            max_id = int(meta["max_doc_id"])
+            # the resumed build must use the SAME shard count the original
+            # derived; for metas that predate the n_shards key, the staged
+            # layout itself is the ground truth — re-deriving from cfg could
+            # disagree with the staged shard_size (different cfg, or a span
+            # above min_shards*target) and mislabel the committed layout
+            n_shards = int(meta.get("n_shards")
+                           or -(-(max_id + 1) // shard_size))
             partials = store.read("partials")
+            staged = True
+        else:
+            # ---- ids + shard size (no tokenize needed) --------------------
+            if id_col is None:
+                d_ids = store.stage_dir("ingest")
+                df, n_raw = assign_doc_ids(
+                    df, order_cols or ["conv_id", "turn_idx"], with_count=True,
+                    staging_dir=d_ids,
+                )
+                id_col = "doc_id"
+                max_id = n_raw - 1
+            else:
+                max_id = int(df.agg(F.max(id_col)).collect()[0][0])
+                # small-corpus scan starvation: a corpus that lives in one file /
+                # one parquet row group tokenizes in ONE task however many cores
+                # exist (split granularity is the row group). When the counted
+                # corpus is provably small — so one extra narrow shuffle of the
+                # raw text is trivially cheap AND the double-execution risk of
+                # df.rdd on exotic plans is bounded by the same row count — fan
+                # the input out to the core count before the tokenize pass. Big
+                # corpora never enter (they have enough splits, and their text
+                # must not be re-shuffled; guide §2.3). Only a caller-supplied
+                # id column can arrive starved: assign_doc_ids above already
+                # range-partitions to defaultParallelism, so that path skips
+                # the probe (one Spark job under AQE).
+                para = spark.sparkContext.defaultParallelism
+                if max_id + 1 <= 5_000_000 and para > 1:
+                    try:
+                        in_parts = df.rdd.getNumPartitions()
+                    except Exception:
+                        in_parts = para
+                    if in_parts < para:
+                        df = df.repartition(para)
+            # shard count from the COUNTED id span (adaptive by default —
+            # bounds per-shard merge input by target_docs_per_shard; see
+            # IndexConfig.n_shards_for), then shard_size = ceil(span/n_shards)
+            n_shards = cfg.index.n_shards_for(max_id + 1)
+            shard_size = max(1, (max_id + n_shards) // n_shards)
 
-    # ---- encode waves -------------------------------------------------------
-    all_shards = [s for s in range(n_shards) if s not in done_segs]
-    wave_size = max(1, -(-len(all_shards) // max(waves, 1)))
-    block_size = cfg.index.block_size
-    seg_dirs: list[str] = []
-    wall_by_dir: dict[str, float] = {}
-    waves_done = 0
-    for w0 in range(0, len(all_shards), wave_size):
-        wave_shards = all_shards[w0: w0 + wave_size]
-        t0 = time.perf_counter()
-        part = partials
-        if len(wave_shards) < n_shards:
-            part = part.filter(F.col("shard_id").isin(wave_shards))
-        d_seg = write_merged_segments(store, part, len(wave_shards),
-                                      block_size, cfg.index.store_dl)
-        wall_by_dir[d_seg] = time.perf_counter() - t0
-        _dbg(f"wave {waves_done} encoded+written")
-        seg_dirs.append(d_seg)
-        if staged:  # per-wave checkpoint only matters when tf is reusable
-            lineage_stub = spark.createDataFrame(
-                [(build_id, int(s), "", "", 0, 0, 0, wall_by_dir[d_seg]) for s in wave_shards],
-                "build_id string, seg_id int, term_lo string, term_hi string, "
-                "n_terms long, doc_count long, bytes long, wall_time_s double",
+            # ---- ONE tokenize pass → map-side PARTIAL segment rows --------
+            # (postings pre-packed per (shard, term) per batch: the shuffle and
+            # every Arrow boundary carries ~|vocab|·|batches| blob rows instead
+            # of |postings| string rows)
+            partials = map_partial_segments(
+                df, text_col, id_col, shard_size,
+                unicode=cfg.index.unicode,
+                store_positions=cfg.index.store_positions,
+                field_cols=list(cfg.index.field_cols),
             )
-            d_lin = store.stage_dir("lineage")
-            lineage_stub.write.mode("overwrite").parquet(d_lin)
-            store.commit({"segments": [d_seg], "lineage": [d_lin]}, replace=False)
-        waves_done += 1
-        if fail_after_wave is not None and waves_done >= fail_after_wave:
-            raise RuntimeError(f"injected failure after wave {waves_done}")
+            staged = waves > 1
+            if staged:
+                d_tf = store.write_table("partials", partials, partition_by=["shard_id"])
+                store.commit({"partials": [d_tf]},
+                             meta={"shard_size": shard_size, "max_doc_id": max_id,
+                                   "n_shards": n_shards})
+                partials = store.read("partials")
+                if d_ids is not None:  # the partials no longer read it
+                    store.discard(d_ids)
+                    d_ids = None
+
+        # ---- encode waves ---------------------------------------------------
+        all_shards = [s for s in range(n_shards) if s not in done_segs]
+        wave_size = max(1, -(-len(all_shards) // max(waves, 1)))
+        block_size = cfg.index.block_size
+        seg_dirs: list[str] = []
+        wall_by_dir: dict[str, float] = {}
+        waves_done = 0
+        for w0 in range(0, len(all_shards), wave_size):
+            wave_shards = all_shards[w0: w0 + wave_size]
+            t0 = time.perf_counter()
+            part = partials
+            if len(wave_shards) < n_shards:
+                part = part.filter(F.col("shard_id").isin(wave_shards))
+            d_seg = write_merged_segments(store, part, len(wave_shards),
+                                          block_size, cfg.index.store_dl)
+            wall_by_dir[d_seg] = time.perf_counter() - t0
+            seg_dirs.append(d_seg)
+            if staged:  # per-wave checkpoint only matters when tf is reusable
+                lineage_stub = spark.createDataFrame(
+                    [(build_id, int(s), "", "", 0, 0, 0, wall_by_dir[d_seg]) for s in wave_shards],
+                    "build_id string, seg_id int, term_lo string, term_hi string, "
+                    "n_terms long, doc_count long, bytes long, wall_time_s double",
+                )
+                d_lin = store.stage_dir("lineage")
+                lineage_stub.write.mode("overwrite").parquet(d_lin)
+                store.commit({"segments": [d_seg], "lineage": [d_lin]}, replace=False)
+            waves_done += 1
+            if fail_after_wave is not None and waves_done >= fail_after_wave:
+                raise RuntimeError(f"injected failure after wave {waves_done}")
+    finally:
+        if d_ids is not None:
+            store.discard(d_ids)
 
     if not staged and seg_dirs:
         store.commit({"segments": seg_dirs}, replace=False)
@@ -433,7 +431,6 @@ def build_index(
             "field_cols": list(cfg.index.field_cols),
         },
     )
-    _dbg("stats+lineage committed")
     return {
         "build_id": build_id,
         "version": store.current_version(),

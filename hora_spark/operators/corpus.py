@@ -21,7 +21,7 @@ tf — it packs partial postings inside the same Arrow pass.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -54,6 +54,12 @@ def assign_doc_ids(
     Pinning matters for correctness: range boundaries are sampled, so the
     counts pass and the id pass must observe the SAME materialization.
     Returns df, or (df, total_count) when with_count=True."""
+    out, n, _ = _assign_ids(df, order_cols, partitions, staging_dir)
+    return (out, n) if with_count else out
+
+
+def _assign_ids(df, order_cols, partitions, staging_dir):
+    """assign_doc_ids → (df, total_count, the persisted pin or None)."""
     spark = df.sparkSession
     n_parts = partitions or spark.sparkContext.defaultParallelism
     cols = [F.col(c) for c in order_cols]
@@ -80,7 +86,7 @@ def assign_doc_ids(
         .withColumn("doc_id", F.col("_off") + F.col("_lidx"))
         .drop("_pid", "_lidx", "_off")
     )
-    return (out, acc) if with_count else out
+    return out, acc, None if staging_dir else base
 
 
 @dataclass
@@ -95,6 +101,15 @@ class Corpus:
     n_docs: int
     avgdl: float
     unicode: bool = False  # tokenizer mode the tables were built with
+    # what prepare() persisted for the caller: tf, and the id table it reads
+    _pinned: tuple = field(default=(), init=False, repr=False)
+
+    def close(self) -> None:
+        """Unpersist what prepare() pinned; the tables stay usable but
+        recompute from the input on each later action."""
+        for df in self._pinned:
+            df.unpersist()
+        self._pinned = ()
 
 
 TF_SCHEMA = "doc_id long, dl int, term string, tf int"
@@ -159,10 +174,15 @@ def prepare(
 ) -> Corpus:
     """text table → Corpus. If id_col is None, assigns doc_id by dense rank
     over order_cols. The tf DataFrame is persisted (it feeds several
-    downstream aggregations)."""
+    downstream aggregations), and so is the id table when id_col is None
+    (its range boundaries are sampled, so it must stay pinned while tf
+    can be recomputed). The caller owns both until `Corpus.close()`."""
     cfg = cfg or EngineConfig()
+    pins = []
     if id_col is None:
-        df = assign_doc_ids(df, order_cols or ["conv_id", "turn_idx"])
+        df, _, pin = _assign_ids(df, order_cols or ["conv_id", "turn_idx"],
+                                 None, None)
+        pins.append(pin)
         id_col = "doc_id"
     else:
         # prepare() is the oracle/test-scale path (the production build
@@ -196,5 +216,7 @@ def prepare(
         .withColumn("idf", idf_col(F.lit(n_docs), F.col("df"), cfg.bm25))
     )
     docs = tf.select("doc_id", "dl").distinct()
-    return Corpus(docs=docs, tf=tf, term_stats=term_stats, n_docs=n_docs,
-                  avgdl=avgdl, unicode=unicode)
+    corpus = Corpus(docs=docs, tf=tf, term_stats=term_stats, n_docs=n_docs,
+                    avgdl=avgdl, unicode=unicode)
+    corpus._pinned = (tf, *pins)
+    return corpus

@@ -91,6 +91,7 @@ class SnapshotStore:
         # persisted/cached executor-side.
         self._df_cache: dict[tuple[str, ...], DataFrame] = {}
         self._bytes_cache: dict[tuple[str, ...], int] = {}
+        self._deleted_cache: dict[tuple[str, ...], object] = {}
 
     def _resolve_fs(self, sc):
         """Hadoop FileSystem for the root's scheme (factored out so tests
@@ -144,9 +145,9 @@ class SnapshotStore:
                 raise FileNotFoundError(f"no snapshot manifest {p} (expired?)")
             cached = json.loads(self._read_text(p))
             self._manifest_cache[version] = cached
-        # callers (commit) mutate the returned dict — hand out a copy so
-        # the cached manifest stays the committed bytes
-        return json.loads(json.dumps(cached))
+        # shared, not copied: meta()/tables() results are read-only, and
+        # commit() copies what it changes, so the cache stays the committed bytes
+        return cached
 
     def tables(self, version: int | None = None) -> dict[str, list[str]]:
         v = self.current_version() if version is None else version
@@ -183,6 +184,11 @@ class SnapshotStore:
         self._fs.mkdirs(self._P(d))
         return d
 
+    def discard(self, d: str) -> None:
+        """Delete a staged dir that no commit will reference, through the
+        store's Hadoop FileSystem (so HDFS/S3A work like the rest)."""
+        self._fs.delete(self._P(d), True)
+
     def write_table(self, table: str, df: DataFrame, partition_by: list[str] | None = None) -> str:
         d = self.stage_dir(table)
         w = df.write.mode("overwrite")
@@ -203,7 +209,8 @@ class SnapshotStore:
         surfaces under the same error."""
         v = self.current_version()
         manifest = self._manifest(v)
-        tables = manifest["tables"]
+        # shallow copy: table lists below are replaced, never mutated
+        tables = dict(manifest["tables"])
         for t in drop or []:
             tables.pop(t, None)
         for t, dirs in updates.items():
@@ -254,22 +261,28 @@ class SnapshotStore:
         return cached
 
     def deleted_ids(self, version: int | None = None):
-        """Sorted int64 array of tombstoned doc ids at `version`, or None.
-        Shared by the query path and compaction/rebuild."""
+        """Sorted, read-only int64 array of tombstoned doc ids at
+        `version`, or None. Shared by the query path and compaction/rebuild;
+        cached by the (immutable) deletes dir list like table_bytes, so
+        only the first search after a delete pays the collect job."""
         import numpy as np
 
-        if not self.exists("deletes", version):
+        key = tuple(self.tables(version).get("deletes") or ())
+        if not key:
             return None
-        rows = self.read("deletes", version).select("doc_id").collect()
-        if not rows:
-            return None
-        return np.unique(np.array([r["doc_id"] for r in rows], np.int64))
+        if key not in self._deleted_cache:
+            rows = self.read("deletes", version).select("doc_id").collect()
+            arr = np.unique(np.array([r["doc_id"] for r in rows], np.int64))
+            arr.setflags(write=False)
+            self._deleted_cache[key] = arr if len(arr) else None
+        return self._deleted_cache[key]
 
     def drop(self) -> None:
         """clear() analog (/root/reference/src/core/ann_index.rs:110)."""
         self._manifest_cache.clear()
         self._df_cache.clear()
         self._bytes_cache.clear()
+        self._deleted_cache.clear()
         self._fs.delete(self._P(self.root), True)
         self._fs.mkdirs(self._P(f"{self.root}/snapshots"))
         self._fs.mkdirs(self._P(f"{self.root}/data"))

@@ -74,48 +74,55 @@ def append_build(
     # containing token-less texts still consumed those ids — advancing by
     # the live count only would hand the same ids to the next batch (two
     # docs sharing a doc_id corrupts the sorted norms lookup and merges
-    # postings of different docs)
-    with_ids, n_raw = assign_doc_ids(
-        new_df, order_cols or ["conv_id", "turn_idx"], with_count=True,
-        staging_dir=store.stage_dir("ingest"),
-    )
-    with_ids = with_ids.withColumn("doc_id", F.col("doc_id") + F.lit(base_id))
-
-    n_new = 0
-    updates: dict[str, list[str]] = {}
-    if n_raw:
-        # tokenizer mode, positions, field columns and the dl layout follow
-        # the EXISTING index (meta), not the caller's cfg — one index, one
-        # tokenizer, one field schema, one layout. Appended field terms
-        # therefore qualify as '<field>:<token>' exactly as in the build.
-        #
-        # frozen stats: the stats table is NOT updated, so terms unseen at
-        # build time have no idf and are not searchable until `rebuild`
-        # (hora analog: a point inserted into a frozen graph can only link
-        # to existing nodes). Segments store idf-free saturation maxima, so
-        # no stats join is needed here at all.
-        partials = map_partial_segments(
-            with_ids, text_col, "doc_id", shard_size,
-            unicode=bool(meta.get("unicode", False)),
-            store_positions=bool(meta.get("store_positions", False)),
-            field_cols=list(meta.get("field_cols") or []),
+    # postings of different docs). The staged table is read only by the
+    # segment write below: it is discarded once that is written, or when
+    # a step raises.
+    d_ids = store.stage_dir("ingest")
+    try:
+        with_ids, n_raw = assign_doc_ids(
+            new_df, order_cols or ["conv_id", "turn_idx"], with_count=True,
+            staging_dir=d_ids,
         )
-        # the new ids span [base_id, base_id + n_raw): one merge partition
-        # per shard that range touches
-        n_parts = (base_id + n_raw - 1) // shard_size - base_id // shard_size + 1
-        d_seg = write_merged_segments(store, partials, n_parts,
-                                      cfg.index.block_size,
-                                      bool(meta.get("store_dl", True)))
-        # an all-token-less batch writes no parquet: it appends NO segment
-        # dir (a schema-less parquet dir would break later reads). The live
-        # count is the written norms rows' doc count (one job over a
-        # pruned column pair, not a second tokenize of the batch).
-        if _has_parquet(spark, d_seg):
-            n_new = int(
-                spark.read.parquet(d_seg).filter(F.col("term") == NORMS_TERM)
-                .agg(F.sum("df_local")).collect()[0][0] or 0
+        with_ids = with_ids.withColumn("doc_id", F.col("doc_id") + F.lit(base_id))
+        n_new = 0
+        updates: dict[str, list[str]] = {}
+        if n_raw:
+            # tokenizer mode, positions, field columns and the dl layout follow
+            # the EXISTING index (meta), not the caller's cfg — one index, one
+            # tokenizer, one field schema, one layout. Appended field terms
+            # therefore qualify as '<field>:<token>' exactly as in the build.
+            #
+            # frozen stats: the stats table is NOT updated, so terms unseen at
+            # build time have no idf and are not searchable until `rebuild`
+            # (hora analog: a point inserted into a frozen graph can only link
+            # to existing nodes). Segments store idf-free saturation maxima, so
+            # no stats join is needed here at all.
+            partials = map_partial_segments(
+                with_ids, text_col, "doc_id", shard_size,
+                unicode=bool(meta.get("unicode", False)),
+                store_positions=bool(meta.get("store_positions", False)),
+                field_cols=list(meta.get("field_cols") or []),
             )
-            updates["segments"] = [d_seg]
+            # the new ids span [base_id, base_id + n_raw): one merge partition
+            # per shard that range touches
+            n_parts = (base_id + n_raw - 1) // shard_size - base_id // shard_size + 1
+            d_seg = write_merged_segments(store, partials, n_parts,
+                                          cfg.index.block_size,
+                                          bool(meta.get("store_dl", True)))
+            # an all-token-less batch writes no parquet: it appends NO segment
+            # dir (a schema-less parquet dir would break later reads). The live
+            # count is the written norms rows' doc count (one job over a
+            # pruned column pair, not a second tokenize of the batch).
+            if _has_parquet(spark, d_seg):
+                n_new = int(
+                    spark.read.parquet(d_seg).filter(F.col("term") == NORMS_TERM)
+                    .agg(F.sum("df_local")).collect()[0][0] or 0
+                )
+                updates["segments"] = [d_seg]
+            else:
+                store.discard(d_seg)
+    finally:
+        store.discard(d_ids)
 
     lineage = spark.createDataFrame(
         [(batch_id, -1, "", "", 0, n_new, 0, 0.0)],

@@ -3,6 +3,7 @@ identity → Structured Streaming ingest (the distributed version of the
 reference's post-build `add_single_item`,
 /root/reference/src/index/hnsw_idx.rs:498-521)."""
 
+import json
 import shutil
 
 import numpy as np
@@ -224,19 +225,43 @@ def test_appends_leave_no_persisted_dataframe(spark, tmp_path):
     """append_build stages its doc ids as parquet like the build does, so
     no appended batch leaves a persisted DataFrame behind (regression:
     each append used to pin one MEMORY_AND_DISK copy of its batch that
-    nothing unpersisted)."""
+    nothing unpersisted). Nor does any write leave a data dir that no
+    manifest references: staged id tables go once their segments are
+    written, and an all-token-less batch keeps no segments dir."""
     schema = "conv_id string, turn_idx int, role string, text string, tool string"
     base = spark.createDataFrame([("c0", 0, "u", "alpha beta", None)], schema)
-    eng = Engine(spark, str(tmp_path / "np"), CFG)
+    root = tmp_path / "np"
+    eng = Engine(spark, str(root), CFG)
     eng.build(base, id_col=None, order_cols=["conv_id", "turn_idx"])
     jsc = spark.sparkContext._jsc
     n0 = jsc.getPersistentRDDs().size()
-    for i in range(3):
-        batch = spark.createDataFrame(
-            [(f"x{i}", 0, "u", f"alpha gamma{i}", None)], schema)
+    for i, text in enumerate(["alpha gamma0", "alpha gamma1", "..."]):
+        batch = spark.createDataFrame([(f"x{i}", 0, "u", text, None)], schema)
         append_build(spark, eng.store, batch, cfg=CFG, batch_id=f"d{i}")
     assert jsc.getPersistentRDDs().size() == n0
-    assert int(eng.store.meta()["n_docs"]) == 4
+    assert int(eng.store.meta()["n_docs"]) == 3
+    assert int(eng.store.meta()["next_doc_id"]) == 4
+
+    assert not list((root / "data" / "ingest").iterdir())
+    referenced = set()
+    for man in (root / "snapshots").glob("v*.json"):
+        for dirs in json.loads(man.read_text())["tables"].values():
+            referenced.update(d.rstrip("/").rsplit("/", 1)[-1] for d in dirs)
+    on_disk = {d.name for t in (root / "data").iterdir() for d in t.iterdir()}
+    assert on_disk <= referenced
+
+
+def test_prepare_close_releases_what_it_persisted(spark, split_data):
+    """Corpus.close() unpersists the id table and tf prepare(id_col=None) pins."""
+    # an input no other test prepares: a plan already cached elsewhere is not pinned again
+    df = split_data[0].filter(F.col("turn_idx") < 3)
+    jsc = spark.sparkContext._jsc
+    n0 = jsc.getPersistentRDDs().size()
+    for _ in range(2):
+        c = prepare(df, id_col=None, order_cols=["conv_id", "turn_idx"])
+        assert jsc.getPersistentRDDs().size() == n0 + 2
+        c.close()
+        assert jsc.getPersistentRDDs().size() == n0
 
 
 _VOCAB = ["alpha", "beta", "gamma", "delta", "water", "people", "time",

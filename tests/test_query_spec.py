@@ -12,6 +12,7 @@ reaching the final sort, where the single-task (pandas) and distributed
 import dataclasses
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -98,13 +99,14 @@ def eng(spark, tmp_path_factory, sf_dir):
 
 
 def _jobs_during(spark, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup("spec_nonfinite", "spec_nonfinite")
+    sc = spark.sparkContext  # a fresh group per call: a group's job ids accumulate
+    group = f"jobs_during_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
     try:
         fn()
     finally:
         sc.setJobGroup("none", "none")
-    return len(sc.statusTracker().getJobIdsForGroup("spec_nonfinite"))
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.mark.parametrize("bad", [float("nan"), float("inf")])
@@ -132,3 +134,20 @@ def test_bad_avgdl_raises_before_any_job(spark, eng, monkeypatch, avgdl):
         eng.search("join hash", k=3)
     assert _jobs_during(spark, lambda: pytest.raises(
         ValueError, eng.search, "join hash", k=3)) == 0
+
+
+def test_warm_search_after_a_delete_runs_one_job(spark, tmp_path):
+    """Only the first search after a delete collects the tombstones (they
+    are cached by the deletes dir list); a later delete is seen at once."""
+    docs = spark.createDataFrame([(i, f"alpha w{i}") for i in range(12)],
+                                 "doc_id long, text string")
+    e = Engine(spark, str(tmp_path / "del"), EngineConfig())
+    e.build(docs, id_col="doc_id")
+
+    def hits():
+        return {r["doc_id"] for r in e.search("alpha", k=20).collect()}
+
+    for gone in ({3}, {3, 5}):
+        e.delete([max(gone)])
+        assert hits() == set(range(12)) - gone
+        assert _jobs_during(spark, hits) == 1
