@@ -143,14 +143,14 @@ class EngineConfig:
     # single-task scan ceiling (query-path latency): when the segments
     # table's pushed-down term scan is at most this many on-disk bytes
     # (and the shard count is sane), the whole search runs as ONE task —
-    # scan, shard grouping, WAND, and the top-k merge happen in a single
-    # stage with no Exchange at all. Above it (real corpora) the plan
+    # the scan and one WAND call over every shard's rows, which returns
+    # the global top-k, form a single stage with no Exchange at all. Above it (real corpora) the plan
     # keeps the shard exchange + distributed merge. 0 disables.
     max_single_task_scan_bytes: int = 64 << 20
     # dictionary caching (query-path latency): the first idf lookup per
-    # snapshot probes the stats table with ONE limit-bounded collect; a
-    # vocabulary at or below this many terms is loaded whole into the
-    # per-version idf cache, so every later search/expansion resolves
+    # stats table probes it with ONE limit-bounded collect; a
+    # vocabulary at or below this many terms is loaded whole into that
+    # table's idf cache, so every later search/expansion resolves
     # idfs (and prefix/wildcard/regex expansions) driver-side with ZERO
     # extra Spark jobs. Bigger vocabularies fall back to the per-term
     # pushed-down isin scan — the limit stops the probe scan early, so

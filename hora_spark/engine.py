@@ -30,7 +30,15 @@ class Engine:
         self.spark = spark
         self.cfg = cfg or EngineConfig()
         self.store = SnapshotStore(spark, path)
-        self._idf_caches: dict[int, dict] = {}
+        self._idf_caches: dict[tuple[str, ...], dict] = {}
+
+    def _idf_cache(self, version: int) -> dict:
+        """The idf/dictionary cache of `version`'s stats table. Keyed by
+        the stats data dirs, not the version: appends, deletes and
+        compaction commit new versions but never rewrite stats, so their
+        searches keep the warm cache and no per-version copy piles up."""
+        key = tuple(self.store.tables(version).get("stats") or ())
+        return self._idf_caches.setdefault(key, {})
 
     # ------------------------------------------------------------ build ---
     def build(
@@ -132,14 +140,14 @@ class Engine:
         min_match, prefix, after, boosts, synonyms} — a mixed workload
         (phrase + bag-of-words + NOT + prefix + page-2 cursors + boosted
         terms + synonym expansion) still runs as a single job."""
-        # idf cache keyed by snapshot version: stats are frozen per
-        # snapshot, so repeat query terms skip the lookup job
+        # idf cache keyed by the stats dirs: stats are frozen until a
+        # rebuild, so repeat query terms skip the lookup job.
         # resolve the snapshot version ONCE per call: every store method
         # downstream (meta/read/table_bytes/exists) takes the explicit
         # version and hits the manifest cache, so the per-call FS listing
         # happens exactly once instead of once per resolution
         v = self.store.current_version() if version is None else version
-        cache = self._idf_caches.setdefault(v, {})
+        cache = self._idf_cache(v)
         return _query.search_topk(
             self.spark, self.store, queries, k=k or self.cfg.k_default,
             cfg=self.cfg, prune=prune, version=v, idf_cache=cache,
@@ -187,7 +195,7 @@ class Engine:
         from hora_spark.operators.explain import explain_scores
 
         v = self.store.current_version() if version is None else version
-        cache = self._idf_caches.setdefault(v, {})
+        cache = self._idf_cache(v)
         if doc_ids is None:
             top = self.search(query, k=k or self.cfg.k_default,
                               version=v)
@@ -262,7 +270,7 @@ class Engine:
         from hora_spark.operators.suggest import suggest_terms
 
         v = self.store.current_version() if version is None else version
-        cache = self._idf_caches.setdefault(v, {})
+        cache = self._idf_cache(v)
         return suggest_terms(self.spark, self.store, query, cfg=self.cfg,
                              n=n, max_distance=max_distance, mode=mode,
                              version=v, idf_cache=cache)
@@ -281,7 +289,7 @@ class Engine:
         from pyspark.sql import functions as F
 
         v = self.store.current_version() if version is None else version
-        cache = self._idf_caches.setdefault(v, {})
+        cache = self._idf_cache(v)
         terms = _query.mlt_select_terms(
             self.store, text, max_terms=max_terms,
             min_term_freq=min_term_freq, version=v, idf_cache=cache)
@@ -307,7 +315,7 @@ class Engine:
         remaining search option (fields, fields_not, negative, boosts,
         synonyms, score_mode, ...)."""
         v = self.store.current_version() if version is None else version
-        cache = self._idf_caches.setdefault(v, {})
+        cache = self._idf_cache(v)
         return _query.search_matches(
             self.spark, self.store, queries, cfg=self.cfg, version=v,
             idf_cache=cache, filter_df=filter_df, mode=mode,
@@ -326,7 +334,7 @@ class Engine:
         expand_prefixes, filter_df)."""
         v = self.store.current_version() if kw.get("version") is None else kw["version"]
         kw["version"] = v
-        cache = self._idf_caches.setdefault(v, {})
+        cache = self._idf_cache(v)
         return _query.facet_counts(
             self.spark, self.store, queries, docs_df, facet_col,
             id_col=id_col, metrics=metrics, cfg=self.cfg, idf_cache=cache,
@@ -345,7 +353,7 @@ class Engine:
         v = (self.store.current_version() if kw.get("version") is None
              else kw["version"])
         kw["version"] = v
-        cache = self._idf_caches.setdefault(v, {})
+        cache = self._idf_cache(v)
         return _query.significant_terms(
             self.spark, self.store, queries, docs_df, k_terms=k_terms,
             min_doc_count=min_doc_count, text_col=text_col, id_col=id_col,
@@ -386,7 +394,7 @@ class Engine:
         v = (self.store.current_version() if kw.get("version") is None
              else kw["version"])
         kw["version"] = v
-        cache = self._idf_caches.setdefault(v, {})
+        cache = self._idf_cache(v)
         return search_collapse(
             self.spark, self.store, queries, docs_df, collapse_col,
             k=k, per_group=per_group, id_col=id_col, cfg=self.cfg,
@@ -423,9 +431,9 @@ class Engine:
             )
         uni = bool(meta.get("unicode", False))
         terms = sorted({t for q in queries for t in tokenize_py(q, unicode=uni)})
-        # standing-query idfs resolve through the same per-snapshot cache
+        # standing-query idfs resolve through the same per-stats cache
         # as search (zero-job once the small-vocab dictionary is loaded)
-        cache = self._idf_caches.setdefault(v, {})
+        cache = self._idf_cache(v)
         missing = [t for t in terms if t not in cache]
         if missing:
             _query._idf_lookup(self.store, v, cache, self.cfg, missing)
@@ -439,9 +447,7 @@ class Engine:
         """Tombstone docs: excluded from every search immediately (scores
         of survivors unchanged); bytes removed at compact/rebuild."""
         from hora_spark.streaming.incremental import delete_docs
-        out = delete_docs(self.spark, self.store, doc_ids)
-        self._idf_caches.clear()  # deletes don't touch idf, but keep tidy
-        return out
+        return delete_docs(self.spark, self.store, doc_ids)
 
     def rebuild(self, build_id: str = "rebuild-0") -> dict:
         """Compact + refresh corpus stats (ann_index.rs:69-71): appended
@@ -449,7 +455,7 @@ class Engine:
         physical, scores equal a from-scratch build over live docs."""
         from hora_spark.streaming.incremental import rebuild
         out = rebuild(self.spark, self.store, self.cfg, build_id=build_id)
-        self._idf_caches.clear()  # idf values changed
+        self._idf_caches.clear()  # new stats dirs: the old caches are dead
         return out
 
     # ------------------------------------------------------------ state ---

@@ -47,14 +47,21 @@ class TermPosting:
     Indexes built with IndexConfig.store_dl=False have no dl_blocks; the
     caller then supplies dl_lookup = (sorted doc ids, dls) decoded from
     the shard's norms sidecar, and per-block dls come from a searchsorted
-    lookup — byte-identical scores, shard-proportional decode cost."""
+    lookup — byte-identical scores, shard-proportional decode cost.
+
+    lo: the source's true lower doc-id bound (a doc-range shard's first
+    id, shard_id × shard_size). The first block covers [lo,
+    block_last[0]], so several shards' postings of one term, passed as
+    separate sources to ONE kernel call, never overlap and each block
+    bound stays as tight as in a per-shard call. A first block ending
+    below lo is a mislabeled row and raises."""
 
     __slots__ = ("idf", "doc_blocks", "tf_blocks", "dl_blocks", "block_last",
                  "block_max", "block_start", "_cache", "dl_lookup",
                  "pos_blocks", "_pos_cache")
 
     def __init__(self, idf, doc_blocks, tf_blocks, dl_blocks, block_last,
-                 block_max, dl_lookup=None, pos_blocks=None):
+                 block_max, dl_lookup=None, pos_blocks=None, lo: int = 0):
         self.idf = float(idf)
         self.doc_blocks = doc_blocks
         self.tf_blocks = tf_blocks
@@ -66,7 +73,12 @@ class TermPosting:
         # block j covers doc ids in [block_start[j], block_last[j]]
         self.block_start = np.empty_like(self.block_last)
         if len(self.block_last):
-            self.block_start[0] = 0
+            if self.block_last[0] < lo:
+                raise ValueError(
+                    f"posting's first block ends at doc {self.block_last[0]}, "
+                    f"below its source's lower bound {lo} (mislabeled "
+                    "shard row)")
+            self.block_start[0] = lo
             self.block_start[1:] = self.block_last[:-1] + 1
         self._cache: dict[int, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
         self.pos_blocks = pos_blocks
@@ -142,6 +154,14 @@ def _in_sorted(sorted_arr: np.ndarray, vals: np.ndarray) -> np.ndarray:
     return sorted_arr[idx] == vals
 
 
+def _in_intervals(ids: np.ndarray, ivals: tuple[np.ndarray, np.ndarray]) -> np.ndarray:
+    """Boolean membership of ids in the sorted, disjoint, inclusive
+    intervals ivals = (los, his) — one searchsorted for any count."""
+    los, his = ivals
+    i = np.searchsorted(los, ids, side="right") - 1
+    return (i >= 0) & (ids <= his[np.maximum(i, 0)])
+
+
 def _tf_sat(tf: np.ndarray, dl: np.ndarray, avgdl: float, k1: float, b: float) -> np.ndarray:
     tf = tf.astype(np.float64)
     return tf / (tf + k1 * (1.0 - b + b * dl / avgdl))
@@ -164,8 +184,7 @@ def _topk(doc_ids: np.ndarray, scores: np.ndarray, k: int) -> tuple[np.ndarray, 
 def _score_terms_on_docs(
     terms: list[TermPosting],
     blocks_per_term: list[np.ndarray],
-    lo: int,
-    hi: int,
+    ivals: tuple[np.ndarray, np.ndarray] | None,
     avgdl: float,
     k1: float,
     b: float,
@@ -179,9 +198,13 @@ def _score_terms_on_docs(
     dismax_tb: float | None = None,
     demote: tuple[np.ndarray, float] | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Exact scores of all docs with id in [lo, hi] across `terms`,
-    decoding only the listed blocks. Accumulation order = term list order
-    (sorted by term at the call site) → deterministic float sums.
+    """Exact scores of all docs inside the interval set `ivals` across
+    `terms`, decoding only the listed blocks. ivals = (los, his): sorted,
+    disjoint, inclusive doc-id intervals (a WAND batch); None = every doc
+    of the listed blocks. Each term's blocks decode once and are masked
+    to the whole set by one searchsorted, so a batch of intervals costs
+    one call. Accumulation order = term list order (sorted by term at the
+    call site) → deterministic float sums, whatever the batch shape.
 
     dismax_tb: disjunction-max score combiner (Lucene DisjunctionMaxQuery
     / ES dis_max): None = BM25 sum (default); a float in [0, 1] switches
@@ -255,18 +278,27 @@ def _score_terms_on_docs(
     all_ids: list[np.ndarray] = []
     all_contrib: list[np.ndarray] = []
     all_slot: list[np.ndarray] = []
+    # per term: (ids, tfs, in-interval mask) over its listed blocks in
+    # order, kept for the chain verifier's position gather
+    rows: list[tuple[np.ndarray, np.ndarray, np.ndarray | None] | None] = []
     for si, (t, blocks) in enumerate(zip(terms, blocks_per_term)):
-        for j in blocks:
-            ids, tfs, dls = t.decode(int(j))
-            m = (ids >= lo) & (ids <= hi)
+        dec = [t.decode(int(j)) for j in blocks]
+        if not dec:
+            rows.append(None)
+            continue
+        ids, tfs, dls = (dec[0] if len(dec) == 1 else
+                         (np.concatenate(c) for c in zip(*dec)))
+        m = None if ivals is None else _in_intervals(ids, ivals)
+        rows.append((ids, tfs, m))
+        if m is not None:
             if not m.any():
                 continue
-            all_ids.append(ids[m])
-            all_contrib.append(
-                t.idf * _tf_sat(tfs[m], dls[m].astype(np.float64), avgdl, k1, b)
-            )
-            if need_slots:
-                all_slot.append(np.full(int(m.sum()), si, np.int32))
+            ids, tfs, dls = ids[m], tfs[m], dls[m]
+        all_ids.append(ids)
+        all_contrib.append(
+            t.idf * _tf_sat(tfs, dls.astype(np.float64), avgdl, k1, b))
+        if need_slots:
+            all_slot.append(np.full(len(ids), si, np.int32))
     if not all_ids:
         return np.empty(0, np.int64), np.empty(0, np.float64)
     cat_ids = np.concatenate(all_ids)
@@ -341,16 +373,22 @@ def _score_terms_on_docs(
                 # duplicate-term slots ("a b a") share one decode+gather
                 docs_l, pos_l = [], []
                 for ti in idxs:
-                    t = terms[ti]
-                    for j in blocks_per_term[ti]:
-                        ids, tfs, _ = t.decode(int(j))
-                        m = (ids >= lo) & (ids <= hi)
-                        if not m.any():
-                            continue
-                        flat, offs = t.decode_pos(int(j))
-                        sel = np.flatnonzero(m)
-                        pos_l.append(flat[segment_gather(offs[sel], tfs[sel])])
-                        docs_l.append(np.repeat(ids[sel], tfs[sel]))
+                    if rows[ti] is None:
+                        continue
+                    ids, tfs, m = rows[ti]
+                    sel = (np.arange(len(ids)) if m is None
+                           else np.flatnonzero(m))
+                    if not len(sel):
+                        continue
+                    # the blocks' flat positions concatenate in block
+                    # order, so one tf cumsum gives every doc's offset
+                    flats = [terms[ti].decode_pos(int(j))[0]
+                             for j in blocks_per_term[ti]]
+                    flat = flats[0] if len(flats) == 1 else np.concatenate(flats)
+                    offs = np.zeros(len(tfs), np.int64)
+                    np.cumsum(tfs[:-1], out=offs[1:])
+                    pos_l.append(flat[segment_gather(offs[sel], tfs[sel])])
+                    docs_l.append(np.repeat(ids[sel], tfs[sel]))
                 got = ((np.concatenate(docs_l), np.concatenate(pos_l))
                        if docs_l
                        else (np.empty(0, np.int64), np.empty(0, np.int64)))
@@ -497,7 +535,7 @@ def shard_topk(
         # enumeration is inherently exhaustive, so block-max cannot help
         blocks_all = [np.arange(len(t.block_last)) for t in terms]
         ids, scores = _score_terms_on_docs(
-            terms, blocks_all, 0, np.iinfo(np.int64).max, avgdl, k1, b,
+            terms, blocks_all, None, avgdl, k1, b,
             deleted, allowed, min_match, min_match_slots, required, chains,
             after, dismax_tb, demote,
         )
@@ -517,6 +555,7 @@ def shard_topk(
         return np.empty(0, np.int64), np.empty(0, np.float64)
 
     ub = np.zeros(n_int, dtype=np.float64)
+    hit = np.zeros(n_int, dtype=bool)
     # which block of term t covers each interval (or none)
     cover: list[np.ndarray] = []
     for t in terms:
@@ -524,49 +563,47 @@ def shard_topk(
         j = np.searchsorted(t.block_last, lo_edges, side="left")
         j = np.clip(j, 0, len(t.block_last) - 1)
         ok = (t.block_start[j] <= lo_edges) & (hi_edges <= t.block_last[j])
-        contrib = np.where(ok, t.block_max[j], 0.0)
-        ub += contrib
+        ub += np.where(ok, t.block_max[j], 0.0)
+        hit |= ok
         cover.append(np.where(ok, j, -1))
+    # gaps between sources (no block of any term) hold no candidate
+    if not hit.all():
+        lo_edges, hi_edges, ub = lo_edges[hit], hi_edges[hit], ub[hit]
+        cover = [c[hit] for c in cover]
 
     order = np.argsort(-ub, kind="stable")
+    neg_ub = -ub[order]  # ascending along the visit order
+    # decoded width summed along the visit order: a batch closes at the
+    # interval that brings its width to BATCH_DOCS
+    cw = np.cumsum(hi_edges[order] - lo_edges[order] + 1)
     top_ids = np.empty(0, np.int64)
     top_scores = np.empty(0, np.float64)
     theta = -np.inf
-    pos = 0
-    while pos < len(order):
+    pos, n_int = 0, len(order)
+    while pos < n_int:
+        full = len(top_ids) >= k
         # strict <: a doc can ATTAIN ub (max in every covering block), and a
         # tie at θ with a smaller doc_id outranks the incumbent — skipping
         # ub == θ would break exact tie-break identity with the oracle
-        if ub[order[pos]] < theta and len(top_ids) >= k:
+        if full and -neg_ub[pos] < theta:
             break  # every remaining interval is provably below θ
-        # take a batch of intervals (bounded decoded width)
-        batch = [order[pos]]
-        width = int(hi_edges[order[pos]] - lo_edges[order[pos]] + 1)
-        pos += 1
-        while pos < len(order) and width < BATCH_DOCS:
-            nxt = order[pos]
-            if ub[nxt] < theta and len(top_ids) >= k:
-                break
-            batch.append(nxt)
-            width += int(hi_edges[nxt] - lo_edges[nxt] + 1)
-            pos += 1
-        batch = np.array(batch)
-        ids_list, sc_list = [], []
-        for i in batch:
-            blocks_per_term = [
-                np.array([cover[ti][i]]) if cover[ti][i] >= 0 else np.empty(0, np.int64)
-                for ti in range(len(terms))
-            ]
-            ids_i, sc_i = _score_terms_on_docs(
-                terms, blocks_per_term, int(lo_edges[i]), int(hi_edges[i]),
-                avgdl, k1, b, deleted, allowed, min_match, min_match_slots,
-                required, chains, after, dismax_tb, demote,
-            )
-            ids_list.append(ids_i)
-            sc_list.append(sc_i)
-        ids_b = np.concatenate([top_ids] + ids_list)
-        sc_b = np.concatenate([top_scores] + sc_list)
-        top_ids, top_scores = _topk(ids_b, sc_b, k)
+        base = int(cw[pos - 1]) if pos else 0
+        end = min(int(np.searchsorted(cw, base + BATCH_DOCS, side="left")) + 1,
+                  n_int)
+        if full:  # the batch stops before the first interval below θ
+            end = min(end, int(np.searchsorted(neg_ub, -theta, side="right")))
+        # one scoring call per batch: its intervals in doc-id order, each
+        # term's covering blocks deduplicated across them
+        batch = np.sort(order[pos:end])
+        pos = end
+        blocks_per_term = [np.unique(c[c >= 0]) for c in (cv[batch] for cv in cover)]
+        ids_b, sc_b = _score_terms_on_docs(
+            terms, blocks_per_term, (lo_edges[batch], hi_edges[batch]),
+            avgdl, k1, b, deleted, allowed, min_match, min_match_slots,
+            required, chains, after, dismax_tb, demote,
+        )
+        top_ids, top_scores = _topk(np.concatenate([top_ids, ids_b]),
+                                    np.concatenate([top_scores, sc_b]), k)
         if len(top_ids) >= k:
             theta = top_scores[-1] if len(top_scores) else -np.inf
     return top_ids, top_scores

@@ -11,7 +11,7 @@ module-level function each.
      expansion against the stats-table dictionary, boost-key scope, and
      the query-term idf lookup (predicate-pushed filter, small collect —
      the query-vs-centroid ranking analog, hora's
-     src/index/pq_idx.rs:413-421), served by the per-snapshot idf cache
+     src/index/pq_idx.rs:413-421), served by the per-stats-table idf cache
      whenever it can be.
   3. choose the physical plan (`_choose_plan`): single-task, distributed
      or cogroup, from the snapshot's size, its deletes and the filter.
@@ -19,12 +19,14 @@ module-level function each.
      terms) — parquet row-group pruning via min/max on the term column,
      the `search_n_center` probe analog: only matching index data is read
      (a store_dl=False index adds its reserved norms row to the same
-     scan) — then per shard DAAT + block-max WAND in a pandas UDF
-     (`_shard_search`) → local top-k.
+     scan) — then DAAT + block-max WAND in a pandas UDF (`_shard_search`)
+     → top-k. The distributed and cogroup plans call it once per shard
+     group; the single-task plan calls it ONCE over every shard's rows,
+     each row one more posting source (as append deltas already are).
   5. merge (`_merge`): global top-k by a per-query rank on (score DESC,
      doc_id ASC) (the distributed form of hora's heap truncation,
-     src/index/hnsw_idx.rs:434-437); the single-task plan merges inside
-     its one task.
+     src/index/hnsw_idx.rs:434-437); the single-task plan's one call
+     already returns it, so nothing merges there.
 
 Queries are BATCHED: one Spark job scores any number of queries; the shard
 UDF loops over queries in numpy. Single-query latency is the batch of one.
@@ -237,14 +239,23 @@ def _shard_search(
     prune: bool,
     deleted: np.ndarray | None = None,
     allowed: np.ndarray | None = None,
+    shard_size: int | None = None,
 ) -> pd.DataFrame:
-    """One shard group: this shard's segment rows for all query terms.
-    Runs WAND once per query. Doc lengths are decoded from the postings'
-    own dl_blocks — the query touches O(matched posting) bytes, never a
+    """One task's rows: the segment rows of one shard (distributed and
+    cogroup plans) or of every shard (single-task plan) for all query
+    terms. Runs WAND once per query over all of them: every row is one
+    posting source, and every doc lives in exactly one source (shards
+    and append deltas are disjoint doc ranges), so one call is exact.
+    shard_size gives each source its true lower doc bound, shard_id ×
+    shard_size, so sources never overlap in the kernel's intervals (None
+    = bound 0, for callers without shard ids). Each query's top-k comes
+    out ordered (score DESC, doc_id ASC), queries in batch order; k=None
+    rows are unordered. Doc lengths are decoded from the postings' own
+    dl_blocks — the query touches O(matched posting) bytes, never a
     shard-sized sidecar (rare-term cost ∝ posting size, not shard size).
     Exception: indexes built with store_dl=False carry no dl_blocks; the
-    scan then includes the shard's norms rows and dls come from a sorted
-    lookup over the decoded sidecar (scores byte-identical)."""
+    scan then includes the norms rows and dls come from a sorted lookup
+    over the decoded sidecars (scores byte-identical)."""
     is_norms = seg_pdf["term"] == NORMS_TERM
     norms_pdf = seg_pdf[is_norms]
     seg_pdf = seg_pdf[~is_norms]
@@ -291,12 +302,13 @@ def _shard_search(
             # the scan includes pos_blocks only for phrase queries
             pos_blocks=(list(pb) if (pb := getattr(row, "pos_blocks", None))
                         is not None and len(pb) else None),
+            lo=int(row.shard_id) * shard_size if shard_size else 0,
         ))
     excl_cache: dict[str, np.ndarray | None] = {}
 
     def _excl_ids(terms) -> np.ndarray | None:
-        """Sorted unique doc ids of these exclusion terms in this shard —
-        each term decoded once per shard regardless of how many queries
+        """Sorted unique doc ids of these exclusion terms in these rows —
+        each term decoded once per task regardless of how many queries
         exclude it. Decodes ONLY doc_blocks (ids): exclusion needs no
         tf/dl, so a store_dl=False layout needs no norms lookup here."""
         arrs = []
@@ -363,9 +375,9 @@ def _shard_search(
                        q.mode == "near_unordered")]
         elif boolean:
             # boolean query (query_string): must terms + positional
-            # chains are REQUIRED clauses — a shard missing any of their
-            # terms can contribute no results (shards partition the
-            # doc-id space, so this is a per-shard skip, not a global one)
+            # chains are REQUIRED clauses — rows missing any of their
+            # terms can contribute no results (sources partition the
+            # doc-id space, so this skip is exact for any row set)
             if any(t not in idx_of for t in q.required) or any(
                     t not in idx_of for ct, _, _ in q.chains for t in ct):
                 return _NO_HITS
@@ -403,7 +415,7 @@ def _shard_search(
                         slots.extend(range(len(tp), len(tp) + len(plist)))
                         tp.extend(plist)
                 if not slots:
-                    return _NO_HITS  # no doc in this shard carries the value
+                    return _NO_HITS  # no doc in these rows carries the value
                 fgs.append(slots)
             required = (required or []) + fgs
             # qualification must count SCORING slots only: a filter entry
@@ -610,7 +622,7 @@ def _expand(store: SnapshotStore, version: int | None, pats: list,
     maxClauseCount) — and each expanded term scores with its OWN idf
     (Lucene's scoring-boolean rewrite): the idfs and each pattern's term
     list (under the tokenizer-unreachable `key(p)`) seed the same
-    per-snapshot cache the plain lookup uses."""
+    idf cache the plain lookup uses."""
     from functools import reduce
     from operator import or_
 
@@ -1085,8 +1097,8 @@ def _choose_plan(
 
     # SMALL-INDEX FAST PATH: when the whole segments table is at most
     # cfg.max_single_task_scan_bytes on disk, coalesce the scan to
-    # one task and do the shard grouping inside it — scan, WAND, and
-    # the top-k merge become a single Exchange-free stage (the two
+    # one task whose one WAND call scores every shard's rows — scan,
+    # WAND and the global top-k become a single Exchange-free stage (the two
     # shuffles of the distributed plan are pure overhead at this
     # size). The byte check is one cached getContentSummary per
     # immutable data dir; the shard-count pre-gate keeps that call
@@ -1111,8 +1123,9 @@ def _run(
     meta: dict, cfg: EngineConfig, plan: _Plan, specs: list[QuerySpec],
     idf_map: dict[str, float], k: int | None, prune: bool,
 ) -> DataFrame:
-    """Stage 4: the pushed-down segment scan and the per-shard WAND UDF
-    of `plan` → per-shard results (the single-task plan: already merged).
+    """Stage 4: the pushed-down segment scan and the WAND UDF of `plan` →
+    per-shard results (the single-task plan: one call over every shard's
+    rows, so its output is already the global top-k).
 
     store_dl=True (default): the scan reads strictly query-term rows
     (positive terms plus any per-query NOT terms — exclusion postings
@@ -1121,6 +1134,7 @@ def _run(
     row rides in the same pushed-down scan (one extra row per shard)."""
     avgdl = float(meta["avgdl"])
     k1, b = cfg.bm25.k1, cfg.bm25.b
+    shard_size = int(meta["shard_size"]) if "shard_size" in meta else None
     live_terms = sorted(idf_map)
     scan_terms = live_terms + sorted(
         {t for s in specs for t in s.id_terms} - set(live_terms))
@@ -1156,7 +1170,7 @@ def _run(
                     alw = np.unique(ids_np[tag == 0])
             return _shard_search(seg_pdf, b_queries.value, b_idf.value, k,
                                  avgdl, k1, b, prune, deleted=dels,
-                                 allowed=alw)
+                                 allowed=alw, shard_size=shard_size)
 
         return (
             segs.groupby("shard_id").cogroup(plan.aux.groupby("shard_id"))
@@ -1168,21 +1182,17 @@ def _run(
         # ONE task: the query state (specs/idf/deletes/keep-list) is
         # query-sized and rides the task closure — four explicit
         # broadcast variables would only add py4j round trips here
-        # (the distributed plans keep their broadcasts).
+        # (the distributed plans keep their broadcasts). Every shard's
+        # row is one more posting source of ONE kernel call, whose output
+        # is already the global per-query top-k in final order — no
+        # per-shard loop and no merge
         def run_one(batches):
             parts = [p for p in batches if len(p)]
-            if not parts:
-                return
-            pdf = pd.concat(parts, ignore_index=True)
-            outs = []
-            for _, g in pdf.groupby("shard_id", sort=False):
-                out = _shard_search(
-                    g, specs, idf_map, k, avgdl, k1, b,
-                    prune, deleted=del_arr, allowed=allow_arr)
-                if len(out):
-                    outs.append(out)
-            if outs:
-                yield from _merge_frames(outs, k)
+            if parts:
+                yield _shard_search(
+                    pd.concat(parts, ignore_index=True), specs, idf_map, k,
+                    avgdl, k1, b, prune, deleted=del_arr, allowed=allow_arr,
+                    shard_size=shard_size)
 
         return segs.coalesce(1).mapInPandas(run_one, RESULT_SCHEMA)
 
@@ -1194,28 +1204,12 @@ def _run(
     def run(seg_pdf: pd.DataFrame) -> pd.DataFrame:
         return _shard_search(seg_pdf, b_queries.value, b_idf.value, k,
                              avgdl, k1, b, prune, deleted=b_del.value,
-                             allowed=b_allow.value)
+                             allowed=b_allow.value, shard_size=shard_size)
 
     return segs.groupBy("shard_id").applyInPandas(run, RESULT_SCHEMA)
 
 
 # ---- stage 5: merge ---------------------------------------------------------
-
-def _merge_frames(outs: list[pd.DataFrame], k: int | None):
-    """The single-task plan's merge, inside its one task: the global
-    per-query top-k and the final (query_id, score DESC, doc_id ASC)
-    order come from one local pandas sort, so no Window/row_number or
-    orderBy plan node exists. k=None (enumeration) stays unordered."""
-    if k is None:
-        yield from outs
-        return
-    allr = pd.concat(outs, ignore_index=True)
-    allr.sort_values(
-        ["query_id", "score", "doc_id"],
-        ascending=[True, False, True], kind="mergesort",
-        ignore_index=True, inplace=True)
-    yield allr.groupby("query_id", sort=False).head(k)
-
 
 def _merge(local: DataFrame, plan: _Plan, k: int | None, meta: dict,
            n_queries: int) -> DataFrame:
@@ -1226,7 +1220,8 @@ def _merge(local: DataFrame, plan: _Plan, k: int | None, meta: dict,
     score, no global rank, no sort — shards are disjoint doc ranges, so
     the union needs no dedup and downstream aggregation (facets,
     counting, exports) keeps its partial/final shape. The single-task
-    plan already merged in its task (`_merge_frames`).
+    plan's one kernel call already emitted the global top-k of each
+    query in this order, so it passes through.
 
     Otherwise per-shard output is ≤ k rows per query, so the merge input
     is bounded by n_shards·|queries|·k rows — driver-computable from the
@@ -1349,9 +1344,10 @@ def search_topk(
     tokens — identical to 'near' for 2-term queries, strictly more
     permissive from 3 terms up).
 
-    idf_cache: optional {term: idf | None} dict scoped to ONE snapshot
-    version (the Engine keys it by version) — repeat terms skip the stats
-    lookup job entirely. None marks a term known to be absent.
+    idf_cache: optional {term: idf | None} dict scoped to ONE stats
+    table (the Engine keys it by the snapshot's stats dirs, which only a
+    rebuild replaces) — repeat terms skip the stats lookup job entirely.
+    None marks a term known to be absent.
 
     filter_df: optional one-column DataFrame of ALLOWED doc ids (filtered
     search — 'only role=user turns', 'only English docs'): results are the

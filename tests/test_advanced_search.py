@@ -176,7 +176,7 @@ def test_prefix_expansion_caches_idf(spark, setup):
     eng, _ = setup
     eng._idf_caches.clear()
     eng.search("wat* people", k=5, expand_prefixes=True).collect()
-    cache = eng._idf_caches[eng.store.current_version()]
+    cache = eng._idf_cache(eng.store.current_version())
     assert "*wat" in cache and all(t.startswith("wat") for t in cache["*wat"])
     # expanded terms' idfs are seeded → a follow-up direct search of one
     # of them needs no lookup (all its terms already cached)
@@ -513,7 +513,7 @@ def test_wildcard_expansion_python_recount(spark, setup):
     vocab = [r["term"] for r in corpus.term_stats.select("term").collect()]
     eng._idf_caches.clear()
     eng.search("w?ter*", k=5, expand_prefixes=True).collect()
-    cache = eng._idf_caches[eng.store.current_version()]
+    cache = eng._idf_cache(eng.store.current_version())
     want = sorted(t for t in vocab if fnmatch.fnmatchcase(t, "w?ter*"))
     assert sorted(cache["*w?ter*"]) == want and want  # non-empty: water...
 

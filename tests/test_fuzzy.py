@@ -66,7 +66,7 @@ def test_fuzzy_distance_2_and_expansion_set(spark, setup):
                                 fuzzy_specs=[("water", 2)]))
     assert rows(eng.search("water~2", k=K, expand_prefixes=True)) == want
     # the cached expansion set == a pure-Python recount over the dictionary
-    cache = eng._idf_caches[eng.store.current_version()]
+    cache = eng._idf_cache(eng.store.current_version())
     vocab = [r["term"] for r in corpus.term_stats.select("term").collect()]
     expect = sorted(t for t in vocab if _py_lev(t, "water") <= 2)
     assert sorted(cache["~2:water"]) == expect

@@ -47,24 +47,29 @@ def appended_engine(spark, split_data, tmp_path_factory):
 
 
 def _frozen_oracle(spark, eng, base, extra, query, k):
-    """Brute-force oracle under FROZEN build-time stats: idf/avgdl from the
-    base corpus, scores over base+appended docs."""
+    """Brute-force oracle rows under FROZEN build-time stats: idf/avgdl
+    from the base corpus, scores over base+appended docs. Both corpora
+    are closed once the rows are collected."""
     c_base = prepare(base, id_col=None, order_cols=["conv_id", "turn_idx"])
     c_all = prepare(base.unionByName(extra), id_col=None,
                     order_cols=["conv_id", "turn_idx"])
-    # doc_id order: base convs sort before "xconv..." so appended ids extend
-    frozen = type(c_all)(
-        docs=c_all.docs, tf=c_all.tf, term_stats=c_base.term_stats,
-        n_docs=c_base.n_docs, avgdl=c_base.avgdl,
-    )
-    return bruteforce_topk(spark, frozen, query, k=k)
+    try:
+        # doc_id order: base convs sort before "xconv..." so appended ids extend
+        frozen = type(c_all)(
+            docs=c_all.docs, tf=c_all.tf, term_stats=c_base.term_stats,
+            n_docs=c_base.n_docs, avgdl=c_base.avgdl,
+        )
+        return bruteforce_topk(spark, frozen, query, k=k).collect()
+    finally:
+        c_base.close()
+        c_all.close()
 
 
 def test_append_merge_on_read_exact(spark, split_data, appended_engine):
     base, extra = split_data
     for q in QUERIES:
         got = appended_engine.search(q, k=15).collect()
-        want = _frozen_oracle(spark, appended_engine, base, extra, q, 15).collect()
+        want = _frozen_oracle(spark, appended_engine, base, extra, q, 15)
         assert [r["doc_id"] for r in got] == [r["doc_id"] for r in want], q
         np.testing.assert_allclose(
             [r["score"] for r in got], [r["score"] for r in want], atol=1e-9

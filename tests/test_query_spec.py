@@ -112,7 +112,7 @@ def _jobs_during(spark, fn):
 @pytest.mark.parametrize("bad", [float("nan"), float("inf")])
 def test_non_finite_idf_raises_before_any_job(spark, eng, bad):
     assert eng.search("join hash", k=3).count() == 3  # warms the idf cache
-    cache = eng._idf_caches[eng.store.current_version()]
+    cache = eng._idf_cache(eng.store.current_version())
     good = cache["hash"]
     cache["hash"] = bad
     try:
@@ -151,3 +151,26 @@ def test_warm_search_after_a_delete_runs_one_job(spark, tmp_path):
         e.delete([max(gone)])
         assert hits() == set(range(12)) - gone
         assert _jobs_during(spark, hits) == 1
+
+
+def test_first_search_after_a_delete_keeps_the_idf_cache(spark, tmp_path):
+    """A delete never rewrites stats, so the idf cache (keyed by the stats
+    dirs) survives it: the first search after a delete skips the
+    dictionary probe and runs one job fewer than on a dropped cache."""
+    docs = spark.createDataFrame([(i, f"alpha w{i}") for i in range(12)],
+                                 "doc_id long, text string")
+    path = str(tmp_path / "keep")
+    kept = Engine(spark, path, EngineConfig())
+    kept.build(docs, id_col="doc_id")
+    dropped = Engine(spark, path, EngineConfig())  # same index, own caches
+    for e in (kept, dropped):
+        e.search("alpha w3", k=20).collect()
+    cache = kept._idf_cache(kept.store.current_version())
+    kept.delete([3])
+    assert kept._idf_cache(kept.store.current_version()) is cache
+    dropped._idf_caches.clear()  # what a delete used to do
+
+    def first(e):
+        return _jobs_during(spark, lambda: e.search("alpha w3", k=20).collect())
+
+    assert first(kept) == first(dropped) - 1

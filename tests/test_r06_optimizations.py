@@ -112,8 +112,10 @@ def test_idf_cache_complete_matches_per_term(spark, eng):
     assert a == b
     from hora_spark.operators.query import _CACHE_COMPLETE
     v = eng.store.current_version()
-    assert eng._idf_caches[v].get(_CACHE_COMPLETE) is not None
-    assert nocache._idf_caches[v].get(_CACHE_COMPLETE) is None
+    assert eng._idf_cache(v).get(_CACHE_COMPLETE) is not None
+    assert nocache._idf_cache(v).get(_CACHE_COMPLETE) is None
+    # one cache per stats table, keyed by its data dirs
+    assert list(eng._idf_caches) == [tuple(eng.store.tables(v)["stats"])]
 
 
 def test_driver_side_expansion_equals_scan(spark, eng):
@@ -146,3 +148,100 @@ def test_qstring_phrase_boost_is_loud():
     spec = parse_query_string('+scan "part filter" "a b"~4 row^2 -dup')
     assert spec["phrases"] == [("part filter", None, False), ("a b", 4, True)]
     assert spec["boosts"] == {"row": 2.0}
+
+
+@pytest.fixture(scope="module")
+def multi(spark, tmp_path_factory):
+    """A multi-source index: positions and two field columns, one append
+    delta (a second posting source per term) and one delete."""
+    from hora_spark.datagen import generate_transcripts
+    from hora_spark.streaming.incremental import append_build
+
+    cfg = EngineConfig(index=IndexConfig(store_positions=True,
+                                         field_cols=("role", "tool")))
+    df = generate_transcripts(spark, 24, seed=3)
+    base = df.filter(df.conv_id < "conv00000018")
+    extra = df.filter(df.conv_id >= "conv00000018")
+    e = Engine(spark, str(tmp_path_factory.mktemp("multi")), cfg)
+    e.build(base)
+    append_build(spark, e.store, extra, cfg=cfg, batch_id="delta-1")
+    e.delete([1, 2, 3, 40])
+    assert len(e.store.tables()["segments"]) == 2
+    return e
+
+
+# the perfbench clause families, one spec each (the page-2 cursor of
+# the boosted one is filled in from page 1)
+FAMILIES = [
+    {"text": "water people time"},
+    {"text": "the water", "mode": "all"},
+    {"text": "of the", "mode": "phrase"},
+    {"text": "the people", "mode": "near", "near_window": 5},
+    {"text": "water the people", "fields": {"role": "user"}},
+    {"text": "water people the time", "exclude": "of", "min_match": 2},
+    {"text": "w0001* w00?12 water", "prefix": True},
+    {"text": "the water people", "boosts": {"water": 2.5}},
+]
+
+
+def _batch_rows(df):
+    return [(r["query_id"], r["doc_id"], r["score"]) for r in df.collect()]
+
+
+def test_plans_equal_on_a_multi_source_index(spark, multi):
+    """Single-task, distributed and cogroup plans, pruned and exhaustive,
+    return identical rows (bit-identical scores) over every clause
+    family, a page-2 cursor and k=None, on an index with an append delta
+    and a delete."""
+    from hora_spark.operators.query import _choose_plan
+
+    engines = {
+        "single": multi,
+        "distributed": Engine(spark, multi.store.root, dataclasses.replace(
+            multi.cfg, max_single_task_scan_bytes=0)),
+        "cogroup": Engine(spark, multi.store.root, dataclasses.replace(
+            multi.cfg, max_broadcast_deletes=0)),
+    }
+    store, v = multi.store, multi.store.current_version()
+    for kind, e in engines.items():
+        assert _choose_plan(spark, store, v, store.meta(v), e.cfg, None,
+                            None).kind == kind
+    page1 = multi.searches([FAMILIES[0], FAMILIES[-1]], k=5).collect()
+    # rows come ordered, so each query keeps its page's last row
+    cursors = {r["query_id"]: (r["score"], r["doc_id"]) for r in page1}
+    assert len(cursors) == 2
+    batch = FAMILIES + [{**FAMILIES[0], "after": cursors[0]},
+                        {**FAMILIES[-1], "after": cursors[1]}]
+    want = _batch_rows(multi.searches(batch, k=5, prune=False))
+    assert {q for q, _, _ in want} == set(range(len(batch)))
+    want_all = sorted(_batch_rows(multi.matches(batch)))
+    assert len(want_all) > len(want)
+    for kind, e in engines.items():
+        for prune in (True, False):
+            assert _batch_rows(e.searches(batch, k=5, prune=prune)) == want, (
+                kind, prune)
+        assert sorted(_batch_rows(e.matches(batch))) == want_all, kind
+
+
+def test_single_task_search_runs_the_kernel_once_per_task(
+        spark, multi, monkeypatch, tmp_path):
+    """The single-task plan scores every shard's rows in ONE _shard_search
+    call; the distributed plan still calls it once per shard group."""
+    from hora_spark.operators import query
+
+    log = tmp_path / "calls"
+    real = query._shard_search
+
+    def counting(*a, **kw):  # pickled by value into the Python worker
+        with open(log, "a") as f:
+            f.write("x")
+        return real(*a, **kw)
+
+    monkeypatch.setattr(query, "_shard_search", counting)
+    assert multi.searches(FAMILIES[:2], k=5).count()
+    assert log.read_text() == "x"
+    log.write_text("")
+    forced = Engine(spark, multi.store.root, dataclasses.replace(
+        multi.cfg, max_single_task_scan_bytes=0))
+    assert forced.searches(FAMILIES[:2], k=5).count()
+    assert len(log.read_text()) > 1

@@ -128,3 +128,39 @@ def test_rare_term_decodes_only_its_posting(monkeypatch):
     # rare posting = 1 block → 3 decodes (doc, tf, dl); the 20k-doc common
     # posting and the shard norms sidecar must never be touched
     assert calls["n"] <= 3, f"decoded {calls['n']} blocks for a 5-doc posting"
+
+
+def test_one_batch_is_one_scoring_call(monkeypatch):
+    """A pruned search whose intervals fit in one WAND batch scores them
+    all in ONE _score_terms_on_docs call, with the exhaustive rows."""
+    import hora_spark.functions.wand as wand_mod
+
+    rng = np.random.default_rng(5)
+    corpus, dls = make_corpus(rng, 400, 6)
+    avgdl = float(dls.mean())
+    tps = postings_for(corpus, dls, ["t0", "t1", "t3"], 400, avgdl, 4)
+    assert sum(len(t.block_last) for t in tps) > 20  # many intervals
+    calls = {"n": 0}
+    real = wand_mod._score_terms_on_docs
+
+    def counting(*a, **kw):
+        calls["n"] += 1
+        return real(*a, **kw)
+
+    monkeypatch.setattr(wand_mod, "_score_terms_on_docs", counting)
+    got = shard_topk(tps, 10, avgdl, K1, B, prune=True)
+    assert calls["n"] == 1
+    want = shard_topk(tps, 10, avgdl, K1, B, prune=False)
+    assert np.array_equal(got[0], want[0]) and np.array_equal(got[1], want[1])
+
+
+def test_source_lower_bound_is_checked():
+    """A row whose first block ends below its source's lower bound is a
+    mislabeled shard row and raises; a true bound shapes block_start."""
+    db, tb, last, _ = encode_posting(np.array([10, 12, 19]), np.ones(3), 2)
+    dlb = [encode_block(np.array([5, 5]), delta=False),
+           encode_block(np.array([5]), delta=False)]
+    tp = TermPosting(1.0, db, tb, dlb, last, np.ones(2), lo=8)
+    assert tp.block_start.tolist() == [8, 13]
+    with pytest.raises(ValueError, match="mislabeled"):
+        TermPosting(1.0, db, tb, dlb, last, np.ones(2), lo=16)
