@@ -144,8 +144,9 @@ class EngineConfig:
     # table's pushed-down term scan is at most this many on-disk bytes
     # (and the shard count is sane), the whole search runs as ONE task —
     # the scan and one WAND call over every shard's rows, which returns
-    # the global top-k, form a single stage with no Exchange at all. Above it (real corpora) the plan
-    # keeps the shard exchange + distributed merge. 0 disables.
+    # the global top-k, form a single stage with no Exchange at all.
+    # Above it (real corpora) the plan keeps the shard exchange +
+    # distributed merge. 0 disables.
     max_single_task_scan_bytes: int = 64 << 20
     # dictionary caching (query-path latency): the first idf lookup per
     # stats table probes it with ONE limit-bounded collect; a

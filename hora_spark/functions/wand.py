@@ -519,7 +519,10 @@ def shard_topk(
     candidate intervals (no early break), which is the correct price.
 
     terms MUST be in sorted term order (pinned summation order).
-    prune=False is the exhaustive decode-all path (test oracle).
+    prune=False is the exhaustive decode-all path (test oracle). A
+    pruned call whose postings span fewer than BATCH_DOCS doc ids takes
+    it too: the first WAND batch would hold every interval, so block-max
+    could skip nothing, and the rows are the same bit for bit.
     deleted: sorted tombstoned doc ids, excluded from results exactly.
     allowed: sorted keep-list (filtered search) — only these doc ids may
     appear; scores of kept docs are the unfiltered scores (stats global).
@@ -529,7 +532,11 @@ def shard_topk(
     if not terms:
         return np.empty(0, np.int64), np.empty(0, np.float64)
 
-    if not prune or k is None:
+    live = [t for t in terms if len(t.block_last)]
+    one_batch = bool(live) and (max(int(t.block_last[-1]) for t in live)
+                                - min(int(t.block_start[0]) for t in live)
+                                < BATCH_DOCS)
+    if not prune or k is None or one_batch:
         # k=None = match ENUMERATION (facets / match counting / export):
         # every qualified doc with its exact score, no heap, no pruning —
         # enumeration is inherently exhaustive, so block-max cannot help

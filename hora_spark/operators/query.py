@@ -1134,7 +1134,7 @@ def _run(
     row rides in the same pushed-down scan (one extra row per shard)."""
     avgdl = float(meta["avgdl"])
     k1, b = cfg.bm25.k1, cfg.bm25.b
-    shard_size = int(meta["shard_size"]) if "shard_size" in meta else None
+    shard_size = int(meta["shard_size"])
     live_terms = sorted(idf_map)
     scan_terms = live_terms + sorted(
         {t for s in specs for t in s.id_terms} - set(live_terms))

@@ -8,14 +8,16 @@ required groups, zero-idf filter groups, phrase, near and unordered
 chains, `after` cursors, dismax, demotion, deletes, keep-lists (empty
 included), k=None, boosted views and tie-heavy corpora (equal lengths,
 so many scores tie at θ), with WAND batches from one interval up to
-the default width. Every case asserts two equalities, bit for
+the default width (every drawn corpus fits one default batch, so that
+width takes the exhaustive path and the small ones run the block-max
+loop). Every case asserts two equalities, bit for
 bit:
   1. block-max pruned == exhaustive (prune=False);
   2. one call over every source == one call per source, merged by
      (score DESC, doc_id ASC) — the single-task plan's one kernel call
      against the per-shard calls of the distributed plan.
 
-Fixed seed, derandomized, bounded examples: about 15 s on 4 cores.
+Fixed seed, derandomized, bounded examples: about 10 s on 4 cores.
 """
 
 from collections import defaultdict

@@ -68,6 +68,27 @@ def test_pruned_equals_exhaustive(seed, block_size, tie_heavy):
             np.testing.assert_allclose(sc_e, sc_p, rtol=0, atol=1e-12)
 
 
+@pytest.mark.parametrize("batch_docs", [1, 16, 128])
+def test_pruned_loop_equals_exhaustive_in_small_batches(monkeypatch, batch_docs):
+    """Postings spanning fewer than BATCH_DOCS doc ids skip the block-max
+    loop; with small batches the same corpora run it (many batches, θ
+    cut-offs, ties at θ) and must return the exhaustive rows."""
+    import hora_spark.functions.wand as wand_mod
+
+    monkeypatch.setattr(wand_mod, "BATCH_DOCS", batch_docs)
+    for seed, tie_heavy in ((0, False), (1, True)):
+        rng = np.random.default_rng(seed)
+        corpus, dls = make_corpus(rng, 500, 30, tie_heavy=tie_heavy)
+        avgdl = float(dls.mean())
+        for q in (["t0"], ["t5", "t1"], ["t0", "t2", "t9", "t20"]):
+            for k in (1, 10, 100):
+                tps = postings_for(corpus, dls, q, 500, avgdl, 8)
+                want = shard_topk(tps, k, avgdl, K1, B, prune=False)
+                got = shard_topk(tps, k, avgdl, K1, B, prune=True)
+                assert np.array_equal(got[0], want[0]), (q, k)
+                assert np.array_equal(got[1], want[1]), (q, k)
+
+
 def test_empty_and_missing_terms():
     ids, sc = shard_topk([], 5, 1.0, K1, B)
     assert len(ids) == 0
@@ -132,7 +153,9 @@ def test_rare_term_decodes_only_its_posting(monkeypatch):
 
 def test_one_batch_is_one_scoring_call(monkeypatch):
     """A pruned search whose intervals fit in one WAND batch scores them
-    all in ONE _score_terms_on_docs call, with the exhaustive rows."""
+    all in ONE _score_terms_on_docs call, with the exhaustive rows; with
+    smaller batches the block-max loop makes one call per batch, not
+    one per interval."""
     import hora_spark.functions.wand as wand_mod
 
     rng = np.random.default_rng(5)
@@ -148,10 +171,15 @@ def test_one_batch_is_one_scoring_call(monkeypatch):
         return real(*a, **kw)
 
     monkeypatch.setattr(wand_mod, "_score_terms_on_docs", counting)
-    got = shard_topk(tps, 10, avgdl, K1, B, prune=True)
-    assert calls["n"] == 1
     want = shard_topk(tps, 10, avgdl, K1, B, prune=False)
-    assert np.array_equal(got[0], want[0]) and np.array_equal(got[1], want[1])
+    for batch_docs, max_calls in ((wand_mod.BATCH_DOCS, 1), (128, 4)):
+        monkeypatch.setattr(wand_mod, "BATCH_DOCS", batch_docs)
+        calls["n"] = 0
+        got = shard_topk(tps, 10, avgdl, K1, B, prune=True)
+        # 400 docs in batches of ≥ 128 decoded docs: at most 4 batches
+        assert 1 <= calls["n"] <= max_calls, (batch_docs, calls["n"])
+        assert np.array_equal(got[0], want[0]), batch_docs
+        assert np.array_equal(got[1], want[1]), batch_docs
 
 
 def test_source_lower_bound_is_checked():
