@@ -2,22 +2,23 @@
 
 Hypothesis draws small corpora (with positions) split into 1-8 doc-range
 sources — shards of `shard_size` docs, each source carrying its true
-lower doc bound — encoded with small block sizes, and queries over the
-whole clause surface the kernel sees: min_match / min_match_slots,
-required groups, zero-idf filter groups, phrase, near and unordered
-chains, `after` cursors, dismax, demotion, deletes, keep-lists (empty
-included), k=None, boosted views and tie-heavy corpora (equal lengths,
-so many scores tie at θ), with WAND batches from one interval up to
-the default width (every drawn corpus fits one default batch, so that
-width takes the exhaustive path and the small ones run the block-max
-loop). Every case asserts two equalities, bit for
-bit:
+lower doc bound — encoded with small block sizes, with and without
+per-posting dl_blocks (store_dl; without them dls come from the norms
+rows), and queries over the whole clause surface the kernel sees:
+min_match / min_match_slots, required groups, zero-idf filter groups,
+phrase, near and unordered chains, `after` cursors, dismax, demotion,
+deletes, keep-lists (empty included), k=None, boosted views and
+tie-heavy corpora (equal lengths, so many scores tie at θ), with WAND
+batches from one interval up to the default width (every drawn corpus
+fits one default batch, so that width takes the exhaustive path and the
+small ones run the block-max loop). Every case asserts two equalities,
+bit for bit:
   1. block-max pruned == exhaustive (prune=False);
   2. one call over every source == one call per source, merged by
      (score DESC, doc_id ASC) — the single-task plan's one kernel call
      against the per-shard calls of the distributed plan.
 
-Fixed seed, derandomized, bounded examples: about 10 s on 4 cores.
+Fixed seed, derandomized, bounded examples: about 13 s on 4 cores.
 """
 
 from collections import defaultdict
@@ -29,6 +30,7 @@ from hypothesis import strategies as st
 
 from hora_spark.config import BM25Config
 from hora_spark.functions.bm25 import idf_np
+from hora_spark.functions.codec import decode_block
 from hora_spark.functions import wand
 from hora_spark.functions.wand import TermPosting, shard_topk
 from hora_spark.operators.query import _chain_slots
@@ -49,9 +51,11 @@ def _corpus(rng, n_sources, shard_size, tail, vocab, max_len, ties):
             for n in lens]
 
 
-def _sources(docs, shard_size, block_size):
+def _sources(docs, shard_size, block_size, store_dl=True):
     """Per source: {term: TermPosting} with lo = shard_id × shard_size,
-    plus avgdl and each term's doc set."""
+    plus avgdl and each term's doc set. store_dl=False encodes no
+    dl_blocks: every posting then reads its dls from the norms rows of
+    all sources, as `_shard_search` does for that layout."""
     rows, pos = defaultdict(list), defaultdict(list)
     for d, toks in enumerate(docs):
         by_term = defaultdict(list)
@@ -69,17 +73,31 @@ def _sources(docs, shard_size, block_size):
     n_live = len(dls)
     idf = {t: float(idf_np(n_live, np.array([len(s)]), CFG)[0])
            for t, s in df.items()}
-    out = []
+    segs = []
     for s in range(-(-len(docs) // shard_size)):
+        pdf = pd.DataFrame(rows[s], columns=["shard_id", "doc_id", "dl",
+                                             "term", "tf"])
+        segs.append(encode_shard_rows(pdf, block_size, store_dl=store_dl,
+                                      pos_flat=np.array(pos[s], np.int64))
+                    if rows[s] else None)
+    dl_lookup = None
+    if not store_dl and any(seg is not None for seg in segs):
+        norms = [r for seg in segs if seg is not None
+                 for r in seg.itertuples(index=False) if r.term == NORMS_TERM]
+        nids = np.concatenate([decode_block(bytes(r.doc_blocks[0]))
+                               for r in norms])
+        ndls = np.concatenate([decode_block(bytes(r.tf_blocks[0]), delta=False)
+                               for r in norms]).astype(np.float64)
+        order = np.argsort(nids, kind="mergesort")
+        dl_lookup = (nids[order], ndls[order])
+    out = []
+    for s, seg in enumerate(segs):
         post = {}
-        if rows[s]:
-            pdf = pd.DataFrame(rows[s], columns=["shard_id", "doc_id", "dl",
-                                                 "term", "tf"])
-            seg = encode_shard_rows(pdf, block_size,
-                                    pos_flat=np.array(pos[s], np.int64))
+        if seg is not None:
             for r in seg.itertuples(index=False):
                 if r.term == NORMS_TERM:
                     continue
+                assert store_dl == bool(len(r.dl_blocks))
                 tf_max = np.asarray(r.block_tf_max, np.float64)
                 dl_min = np.asarray(r.block_dl_min, np.float64)
                 w = idf[r.term]
@@ -87,7 +105,8 @@ def _sources(docs, shard_size, block_size):
                     w, list(r.doc_blocks), list(r.tf_blocks),
                     list(r.dl_blocks), r.block_last,
                     w * tf_max / (tf_max + K1 * (1 - B + B * dl_min / avgdl)),
-                    pos_blocks=list(r.pos_blocks), lo=s * shard_size)
+                    dl_lookup=dl_lookup, pos_blocks=list(r.pos_blocks),
+                    lo=s * shard_size)
         out.append(post)
     return out, avgdl, df
 
@@ -194,28 +213,29 @@ query_st = st.fixed_dictionaries({
     max_len=st.integers(1, 10),
     ties=st.booleans(),
     block_size=st.integers(1, 4),
+    store_dl=st.booleans(),
     batch_docs=st.sampled_from([1, 3, 16, wand.BATCH_DOCS]),
     rng_seed=st.integers(0, 2**31 - 1),
     queries=st.lists(query_st, min_size=1, max_size=4),
 )
 def test_one_call_over_sources_equals_pruned_exhaustive_and_merged(
         n_sources, shard_size, tail, vocab, max_len, ties, block_size,
-        batch_docs, rng_seed, queries):
+        store_dl, batch_docs, rng_seed, queries):
     # small batches make the pruned loop run many batches and stop at θ
     real_batch, wand.BATCH_DOCS = wand.BATCH_DOCS, batch_docs
     try:
         _check(n_sources, shard_size, tail, vocab, max_len, ties, block_size,
-               rng_seed, queries)
+               store_dl, rng_seed, queries)
     finally:
         wand.BATCH_DOCS = real_batch
 
 
 def _check(n_sources, shard_size, tail, vocab, max_len, ties, block_size,
-           rng_seed, queries):
+           store_dl, rng_seed, queries):
     tail = min(tail, shard_size)
     rng = np.random.default_rng(rng_seed)
     docs = _corpus(rng, n_sources, shard_size, tail, vocab, max_len, ties)
-    sources, avgdl, df = _sources(docs, shard_size, block_size)
+    sources, avgdl, df = _sources(docs, shard_size, block_size, store_dl)
     n_docs = len(docs)
     for raw in queries:
         toks = [f"t{x % vocab}" for x in raw["toks"]]

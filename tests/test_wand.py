@@ -53,40 +53,27 @@ def postings_for(corpus, dls, terms, n_docs, avgdl, block_size):
 @pytest.mark.parametrize("seed", [0, 1, 2, 3])
 @pytest.mark.parametrize("block_size", [1, 4, 64])
 @pytest.mark.parametrize("tie_heavy", [False, True])
-def test_pruned_equals_exhaustive(seed, block_size, tie_heavy):
+def test_pruned_equals_exhaustive(monkeypatch, seed, block_size, tie_heavy):
+    """At the default WAND batch width these 500-doc postings fit one
+    batch and take the exhaustive path; batches of 1 and 16 decoded docs
+    run the block-max loop over them (many batches, θ cut-offs, ties at
+    θ), which must return the exhaustive rows too."""
+    import hora_spark.functions.wand as wand_mod
+
     rng = np.random.default_rng(seed)
     n_docs, n_terms = 500, 30
     corpus, dls = make_corpus(rng, n_docs, n_terms, tie_heavy=tie_heavy)
     avgdl = float(dls.mean())
     queries = [["t0"], ["t5", "t1"], ["t0", "t2", "t9", "t20"], ["t29"], ["t0", "t0absent"]]
-    for q in queries:
-        for k in (1, 5, 10, 100):
-            tps = postings_for(corpus, dls, q, n_docs, avgdl, block_size)
-            ids_e, sc_e = shard_topk(tps, k, avgdl, K1, B, prune=False)
-            ids_p, sc_p = shard_topk(tps, k, avgdl, K1, B, prune=True)
-            assert (ids_e == ids_p).all(), f"ids differ q={q} k={k}"
-            np.testing.assert_allclose(sc_e, sc_p, rtol=0, atol=1e-12)
-
-
-@pytest.mark.parametrize("batch_docs", [1, 16, 128])
-def test_pruned_loop_equals_exhaustive_in_small_batches(monkeypatch, batch_docs):
-    """Postings spanning fewer than BATCH_DOCS doc ids skip the block-max
-    loop; with small batches the same corpora run it (many batches, θ
-    cut-offs, ties at θ) and must return the exhaustive rows."""
-    import hora_spark.functions.wand as wand_mod
-
-    monkeypatch.setattr(wand_mod, "BATCH_DOCS", batch_docs)
-    for seed, tie_heavy in ((0, False), (1, True)):
-        rng = np.random.default_rng(seed)
-        corpus, dls = make_corpus(rng, 500, 30, tie_heavy=tie_heavy)
-        avgdl = float(dls.mean())
-        for q in (["t0"], ["t5", "t1"], ["t0", "t2", "t9", "t20"]):
-            for k in (1, 10, 100):
-                tps = postings_for(corpus, dls, q, 500, avgdl, 8)
-                want = shard_topk(tps, k, avgdl, K1, B, prune=False)
-                got = shard_topk(tps, k, avgdl, K1, B, prune=True)
-                assert np.array_equal(got[0], want[0]), (q, k)
-                assert np.array_equal(got[1], want[1]), (q, k)
+    for batch_docs in (wand_mod.BATCH_DOCS, 1, 16):
+        monkeypatch.setattr(wand_mod, "BATCH_DOCS", batch_docs)
+        for q in queries:
+            for k in (1, 5, 10, 100):
+                tps = postings_for(corpus, dls, q, n_docs, avgdl, block_size)
+                ids_e, sc_e = shard_topk(tps, k, avgdl, K1, B, prune=False)
+                ids_p, sc_p = shard_topk(tps, k, avgdl, K1, B, prune=True)
+                assert (ids_e == ids_p).all(), f"ids differ q={q} k={k} batch={batch_docs}"
+                np.testing.assert_allclose(sc_e, sc_p, rtol=0, atol=1e-12)
 
 
 def test_empty_and_missing_terms():
